@@ -93,14 +93,14 @@ object ImageDupProbe {
       (pairs.count(), fl)
     }
 
-    // the eager localCheckpoint IS the materialization — it must sit
+    // the eager Scale.materialize IS the materialization — it must sit
     // INSIDE the timed block or the wall measures a cached count (the
     // probe-design trap this file exists to avoid)
     var capped: org.apache.spark.sql.DataFrame = null
     timed("neardup(capped)") {
       capped = graft.ext.Multimodal
         .imageNearDup(media, "media_id", "content", maxDist = 8)
-        .localCheckpoint()
+        .transform(graft.ext.Scale.materialize)
       capped.count()
     }
     val (total, fl) = floodSplit(capped)
@@ -116,7 +116,7 @@ object ImageDupProbe {
       timed("neardup(uncapped)") {
         free = graft.ext.Multimodal.imageNearDup(media, "media_id",
           "content", maxDist = 8, maxBucketSize = Int.MaxValue)
-          .localCheckpoint()
+          .transform(graft.ext.Scale.materialize)
         free.count()
       }
       val (ft, ffl) = floodSplit(free)

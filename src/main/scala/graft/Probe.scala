@@ -25,8 +25,8 @@ object Probe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CHECKPOINT_DIR upgrades every Scale.cut in the probed
-    // queries from localCheckpoint to a RELIABLE checkpoint (the
+    // SPARK_GRAFT_CHECKPOINT_DIR switches every Scale.materialize in the
+    // probed queries from local blocks to RELIABLE checkpoint files (the
     // cluster deployment's configuration) — the g1/g2 multi-TB
     // checkpoint-cost A/B runs the same gate with and without it.
     sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")

@@ -55,7 +55,7 @@ object Curation {
     // not the decontam join.
     val sampled = Sampling.temperatureSample(
       afterDecontam, lang, col(id), alpha = alpha, seed = seed)
-      .transform(Scale.cut)
+      .transform(Scale.materialize)
 
     // 5. shard assignment in deterministic id order; lang rides the
     // prefix-sum shuffle as a carry column (no corpus-sized join).
@@ -122,9 +122,9 @@ object Curation {
     // window), and Catalyst does not reuse a common scan across
     // subtrees — without the cut, the whole upstream chain re-executes
     // ~4x (measured 11.3 s -> the checkpointed plan at sf0.1).
-    // The cut goes through Scale.cut: a RELIABLE checkpoint to the
-    // configured dir when one is set (cluster deployments), else a
-    // disk-backed localCheckpoint — the same tactic Graphs.pageRank
+    // The cut goes through Scale.materialize: a RELIABLE checkpoint to
+    // the configured dir when one is set (cluster deployments), else a
+    // disk-backed local checkpoint — the same tactic Graphs.pageRank
     // uses per iteration.
     val others = docs.columns.filterNot(c => c == id || c == text)
     val afterDedup = afterQuality
@@ -134,7 +134,7 @@ object Curation {
         case c if c == text => col(text)
         case c => col("__rep").getField(c).as(c)
       }: _*)
-      .transform(Scale.cut)
+      .transform(Scale.materialize)
 
     // 2b. optional fuzzy near-dup: MinHash LSH pairs over the
     // exact-deduped survivors, transitive min-id component keep. The
@@ -147,7 +147,7 @@ object Curation {
       case Some(conf) =>
         val pairs = Dedup.minHashPairs(afterDedup, text, id, conf)
         Dedup.dropFromPairsTransitive(afterDedup, id, pairs)
-          .transform(Scale.cut)
+          .transform(Scale.materialize)
     }
 
     // 3. decontamination — drop documents sharing an n-gram with the
@@ -553,7 +553,7 @@ object Curation {
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") <= maxPerHost)
       .drop("__rn")
-      .transform(Scale.cut)
+      .transform(Scale.materialize)
     // inline Gopher filter (the [[curate]] quality shape): one narrow
     // filter instead of gopherQuality + id-semi-join
     val qMetrics = TextAnalysis.gopherMetricCols(col(bodyCol))

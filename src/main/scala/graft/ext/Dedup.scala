@@ -210,7 +210,7 @@ object Dedup {
     * read at minPartitionSize EVEN over an upstream numbered
     * repartition — one task computing hundreds of thousands of pairs
     * from a sub-MB posting shuffle. Routing the repartition through
-    * [[Scale.cut]] makes it the ROOT of its own query execution
+    * [[Scale.materialize]] makes it the ROOT of its own query execution
     * (where REPARTITION_BY_NUM is always respected — r17 verified the
     * isolated shape) and hands the groupBy a LogicalRDD already
     * hash-partitioned on the bucket key, so no coalescable exchange
@@ -235,7 +235,7 @@ object Dedup {
         val width = math.max(
           withBucket.sparkSession.sparkContext.defaultParallelism,
           withBucket.sparkSession.sessionState.conf.numShufflePartitions)
-        Scale.cut(kept0.repartition(width, keyCols.map(col): _*))
+        Scale.materialize(kept0.repartition(width, keyCols.map(col): _*))
       }
     // Fused pair expansion (SortedIdPairs, r18): one codegen'd node per
     // bucket instead of the interpreted
@@ -433,7 +433,7 @@ object Dedup {
     // writeIndexRows; the r18 profile read the append's fps write as a
     // ~0.9 s single-task stage at gate scale).
     val wide = Scale.fanOut(df)
-    val incBands = Scale.cut(bandsOf(wide, text, id, conf)
+    val incBands = Scale.materialize(bandsOf(wide, text, id, conf)
       .join(broadcast(tombs), Seq("band", "band_hash"), "left_anti"))
     val touched = incBands.select(col("band"), col("band_hash")).distinct()
     // distinct-doc union count per touched bucket; the broadcast
@@ -757,7 +757,7 @@ object Dedup {
     try {
       var labels = edges.select(col("src").as("id")).distinct()
         .withColumn("label", col("id"))
-        .transform(Scale.cut)
+        .transform(Scale.materialize)
       var converged = false
       var i = 0
       while (!converged && i < maxIter) {
@@ -766,7 +766,7 @@ object Dedup {
           .select(col("dst").as("id"), col("label"))
         val next = labels.union(msgs)
           .groupBy(col("id")).agg(min(col("label")).as("label"))
-          .transform(Scale.cut)
+          .transform(Scale.materialize)
         converged = next.as("n")
           .join(labels.select(col("id"), col("label").as("old")), Seq("id"))
           .where(col("label") =!= col("old"))
@@ -813,12 +813,12 @@ object Dedup {
     val allIds = pairs.select(col(a).as("id"))
       .union(pairs.select(col(b).as("id")))
       .distinct()
-      .transform(Scale.cut)
+      .transform(Scale.materialize)
     var edges = pairs
       .select(greatest(col(a), col(b)).as("u"), least(col(a), col(b)).as("v"))
       .where(col("u") =!= col("v"))
       .distinct()
-      .transform(Scale.cut)
+      .transform(Scale.materialize)
     var converged = edges.isEmpty
     var i = 0
     while (!converged && i < maxIter) {
@@ -839,7 +839,7 @@ object Dedup {
         .where(col("nu") =!= col("nv"))
         .select(col("nu").as("u"), col("nv").as("v"))
         .distinct()
-        .transform(Scale.cut)
+        .transform(Scale.materialize)
       converged = next.count() == edges.count() && next.except(edges).isEmpty
       edges = next
       i += 1
@@ -1354,30 +1354,26 @@ object Dedup {
     */
   def prefixJaccardPairs(df: DataFrame, text: String, id: String,
       n: Int = 3, thresholdPct: Int = 50,
-      maxDocsPerGram: Int = 0, hotCap: Int = 65536,
-      checkpointDir: Option[String] = None): DataFrame = {
+      maxDocsPerGram: Int = 0, hotCap: Int = 65536): DataFrame = {
     require(thresholdPct >= 1 && thresholdPct <= 100,
       s"thresholdPct out of range: $thresholdPct")
     require(hotCap >= 1, s"hotCap out of range: $hotCap")
     // The (doc_id, grams, ng) frame is read by FOUR subtrees — the
     // heavy-gram aggregate, the prefix projection, and both verify
     // sides — and gram derivation is the operator's single largest
-    // term (round-7 measurement: ~45% of wall). Materialize it ONCE
-    // (localCheckpoint by default; pass checkpointDir for the reliable
-    // cluster path — the groupRank/p1 measured-cut pattern, released
-    // via Packing.releaseLocalCheckpoints / scopedCheckpoints) so the
-    // corpus pays one gram pass instead of four.
+    // term (round-7 measurement: ~45% of wall). Materialize it ONCE so
+    // the corpus pays one gram pass instead of four.
     // Scale.fanOut (the r17 d13 fix, §2.3): gram derivation, the
     // rarest-first sort and the fingerprint sort are CPU-bound narrow
     // passes, and the gate corpus arrives as 1-2 byte-sized splits —
     // floor the checkpoint's parallelism at the core count so every
     // downstream narrow pass runs wide (no-op once the scan has >=
     // cores splits).
-    val grams = Packing.materializeOnce(Scale.fanOut(
+    val grams = Scale.materialize(Scale.fanOut(
         df.select(col(id).as("doc_id"), col(text)))
       .select(col("doc_id"), tokenGramsCol(col(text), n).as("grams"))
       .where(size(col("grams")) > 0)
-      .withColumn("ng", size(col("grams"))), checkpointDir)
+      .withColumn("ng", size(col("grams"))))
     // Bounded heavy-gram table: per-doc-distinct grams, so count = df.
     // Broadcast, not an expression payload: a 65536-entry table baked
     // into the expression rode in EVERY task binary (~1.2 MB, ~0.1 s
@@ -1407,7 +1403,8 @@ object Dedup {
       sess.sparkContext.defaultParallelism.toLong * 4L *
         sess.sessionState.conf.getConf(org.apache.spark.sql.internal.SQLConf
           .COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
-    val expandWide = Scale.materializedBytes(grams).exists(_ <= collapseBudget)
+    val expandWide =
+      grams.queryExecution.optimizedPlan.stats.sizeInBytes <= collapseBudget
     val cand0 = bucketPairs(prefix, Seq("gram"), "doc_id", cap,
       skewSafe = true, expandWide = expandWide)
     // Same regime, same fix for the VERIFY input: the deduped candidate
@@ -1419,7 +1416,7 @@ object Dedup {
     // which also pre-aligns the first verify join's probe side.
     val cand =
       if (!expandWide) cand0
-      else Scale.cut(cand0.repartition(math.max(
+      else Scale.materialize(cand0.repartition(math.max(
         sess.sparkContext.defaultParallelism,
         sess.sessionState.conf.numShufflePartitions), col("id_a")))
     // Verify with the codegen'd sorted-merge intersect, NOT

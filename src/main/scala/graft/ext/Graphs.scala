@@ -18,10 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Graphs {
 
-  /** [[Scale.cut]] — reliable checkpoint when the context has a
-    * checkpoint dir, localCheckpoint otherwise; see its doc. */
-  private def cut(df: DataFrame): DataFrame = Scale.cut(df)
-
   /** Per-node triangle counts via degree-ordered orientation (the
     * classical O(m^1.5) bound): each undirected edge is stored ONCE,
     * directed from its lower-(degree, id) endpoint to its higher one.
@@ -74,9 +70,8 @@ object Graphs {
     // reference. The r16 10x probe measured the un-materialized plan
     // re-running the self-join + distinct repeatedly: 64.1 -> 33.3 s
     // at 6M-row lineitem from these two checkpoints alone (and 6.2 ->
-    // 5.0 s at the bench scale). 16 bytes/edge; `cut` upgrades to a
-    // reliable checkpoint when the context has a checkpoint dir.
-    val e = cut(rawPairs.distinct())
+    // 5.0 s at the bench scale). 16 bytes/edge.
+    val e = Scale.materialize(rawPairs.distinct())
     val deg = e.select(col("u").as("node"))
       .unionAll(e.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("d"))
@@ -98,41 +93,31 @@ object Graphs {
         .hint("shuffle_hash"), "v")
     // referenced three times (two wedge arms + closure); same 16 B/edge.
     // Partitioned AND sorted by the wedge-join key BEFORE the cut
-    // (guide §2.4 — share one exchange): a checkpoint preserves its
-    // physical partitioning and ordering (LogicalRDD), so BOTH wedge
+    // (guide §2.4 — share one exchange): a materialized frame declares
+    // the partitioning and ordering it was written with, so BOTH wedge
     // arms read an already-hash(a)-partitioned, a-sorted relation and
     // the self-join plans with ZERO exchanges and ZERO sorts — the r17
     // plan paid one exchange + one sort per arm on the same frame.
     // One edge-sized exchange + in-partition sort here replaces two of
     // each there; core-count partitioning, as pinned for g2's rounds.
     val p = edges.sparkSession.sparkContext.defaultParallelism
-    // AQE is scoped OFF for this one eager checkpoint job: an
-    // AQE-backed Dataset.localCheckpoint materializes its LogicalRDD
-    // with UnknownPartitioning (the adaptive plan cannot promise a
-    // partitioning before execution), which silently re-inserts the
-    // per-arm Exchange+Sort this layout exists to remove — verified in
-    // the r18 plan dumps. The non-adaptive checkpoint preserves
-    // hashpartitioning(a, p) and the a-ordering; the job itself is the
-    // same three pinned-width hinted joins either way.
-    val sess = edges.sparkSession
-    val prevAqe = sess.conf.get("spark.sql.adaptive.enabled", "true")
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    val oriented =
-      try cut(ranked.select(
-          when(col("ru") < col("rv"), col("u")).otherwise(col("v")).as("a"),
-          when(col("ru") < col("rv"), col("v")).otherwise(col("u")).as("b"),
-          when(col("ru") < col("rv"), col("rv")).otherwise(col("ru")).as("rb"))
-        .repartition(p, col("a"))
-        .sortWithinPartitions("a"))
-      finally sess.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    val oriented = Scale.materialize(ranked.select(
+        when(col("ru") < col("rv"), col("u")).otherwise(col("v")).as("a"),
+        when(col("ru") < col("rv"), col("v")).otherwise(col("u")).as("b"),
+        when(col("ru") < col("rv"), col("rv")).otherwise(col("ru")).as("rb"))
+      .repartition(p, col("a"))
+      .sortWithinPartitions("a"))
     // The wedge SELF-join stays sort-merge deliberately: an A/B with a
     // shuffle_hash hint read 22.8 -> 24.4 s of stage task time (+2.2 s
     // GC) — the per-task hash relation over an arm of the edge list
     // costs more than sorting the arms, because the join's OUTPUT
     // (wedges) dwarfs both inputs either way. With the pre-sorted
-    // checkpoint above, the SMJ's arm sorts vanish outright.
+    // checkpoint above, the SMJ's arm sorts vanish outright. The merge
+    // hint keeps that shape when the measured edge list is small
+    // enough to broadcast.
     val wedges = oriented.select(col("a"), col("b").as("y"), col("rb").as("ry"))
-      .join(oriented.select(col("a"), col("b").as("z"), col("rb").as("rz")), "a")
+      .join(oriented.select(col("a"), col("b").as("z"), col("rb").as("rz"))
+        .hint("merge"), "a")
       .where(col("ry") < col("rz"))
       .select(col("a").as("x"), col("y"), col("z"))
     // Map-side non-closing-wedge drop: membership is on the UNDIRECTED
@@ -203,7 +188,7 @@ object Graphs {
     require(iters >= 1 && iters <= 100, s"iters out of range: $iters")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct out of range: $dampingPct")
-    val Scale = 1000000000000L
+    val one = 1000000000000L // SCALE: rank units per 1.0
     // Iteration partitioning is pinned to an EXPLICIT count: an iterative
     // job re-pays every shuffle per round, so letting session-level AQE
     // sizing (high initialPartitionNum) float it multiplies per-round
@@ -212,31 +197,23 @@ object Graphs {
     // partitioning once up front for the same reason; rank rows are
     // node-sized (a long each), so core-count partitions never spill.
     val p = edges.sparkSession.sparkContext.defaultParallelism
-    // The static frames ship as partition-preserving CHECKPOINTS, not
-    // .cache() (r18): (a) an InMemoryRelation drags its full build
+    // The static frames ship as partition-preserving materializations,
+    // not .cache() (r18): (a) an InMemoryRelation drags its full build
     // lineage into every task binary of every per-round stage — the
     // r18 profile read a fixed ~0.3 s/task across the ~30 tiny
     // per-round stages, more task time than the joins' real work —
-    // while a LogicalRDD scan serializes to a few KB; (b) with AQE
-    // scoped off for the eager checkpoint job (an AQE-backed
-    // localCheckpoint materializes with UnknownPartitioning — the
-    // triangleCounts wedge layout above), the LogicalRDD KEEPS its
-    // hashpartitioning, so every per-round join reads co-partitioned
-    // inputs with ZERO exchanges: the transpose aggregation's single
-    // shuffle is all that remains per round. Checkpoint blocks are
-    // freed by the ContextCleaner when the frames go unreachable,
-    // like every other cut site.
-    val sess = edges.sparkSession
-    def cutKeyed(df: DataFrame): DataFrame = {
-      val prev = sess.conf.get("spark.sql.adaptive.enabled", "true")
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
-      try cut(df) finally sess.conf.set("spark.sql.adaptive.enabled", prev)
-    }
-    val e = cutKeyed(edges.select(col(src).as("__s"), col(dst).as("__d"))
+    // while a LogicalRDD scan serializes to a few KB; (b) the
+    // materialized frame KEEPS its hashpartitioning, so every
+    // per-round join reads co-partitioned inputs with ZERO exchanges:
+    // the transpose aggregation's single shuffle is all that remains
+    // per round. Blocks are freed by the ContextCleaner when the
+    // frames go unreachable.
+    val e = Scale.materialize(edges
+      .select(col(src).as("__s"), col(dst).as("__d"))
       .where(col("__s").isNotNull && col("__d").isNotNull)
       .distinct()
       .repartition(p, col("__s")))
-    val nodes = cutKeyed(e.select(col("__s").as("node"))
+    val nodes = Scale.materialize(e.select(col("__s").as("node"))
       .unionAll(e.select(col("__d").as("node")))
       .distinct()
       .repartition(p, col("node")))
@@ -245,13 +222,13 @@ object Graphs {
     // rounds paid 5 degree aggregations + 5 extra joins). e is already
     // hash(__s, p)-partitioned, so the aggregation is exchange-free
     // and its output keeps that partitioning for the per-round join.
-    val outdeg = cutKeyed(e.groupBy(col("__s"))
+    val outdeg = Scale.materialize(e.groupBy(col("__s"))
       .agg(count(lit(1)).as("__od")))
     locally {
       val n = nodes.count()
       require(n > 0, "pageRank: empty graph")
-      val base = (100L - dampingPct) * Scale / (100L * n)
-      var ranks = nodes.withColumn("__r", lit(Scale / n))
+      val base = (100L - dampingPct) * one / (100L * n)
+      var ranks = nodes.withColumn("__r", lit(one / n))
       for (_ <- 1 to iters) {
         // contrib(u) = rank(u) div outdeg(u) is a function of the NODE,
         // so it is computed on the node-sized frame (one div per node,
@@ -274,11 +251,11 @@ object Graphs {
           .select(col("node"),
             (lit(base) +
               expr(s"($dampingPct * coalesce(__in, 0L)) div 100")).as("__r"))
-          // cutKeyed, not plain cut: the round's output is already
-          // hash(node, p)-partitioned (streamed side of the left
-          // join), and preserving that through the checkpoint is what
-          // makes the NEXT round's first join exchange-free.
-          .transform(cutKeyed)
+          // the round's output is already hash(node, p)-partitioned
+          // (streamed side of the left join), and preserving that
+          // through the materialization is what makes the NEXT round's
+          // first join exchange-free.
+          .transform(Scale.materialize)
       }
       val out = ranks.select(col("node"), col("__r").as("rank_e12"))
       if (topK > 0) out.orderBy(desc("rank_e12"), col("node")).limit(topK)
@@ -333,10 +310,10 @@ object Graphs {
     val und = e0.unionAll(e0.select(col("v").as("u"), col("u").as("v")))
       .distinct()
       .repartition(p, col("u"))
-      .transform(cut)
+      .transform(Scale.materialize)
     var labels = und.select(col("u").as("node")).distinct()
       .select(col("node"), col("node").as("lbl"))
-      .transform(cut)
+      .transform(Scale.materialize)
     for (_ <- 1 to iters) {
       labels = und
         .join(labels.select(col("node").as("v"), col("lbl")), Seq("v"))
@@ -344,7 +321,7 @@ object Graphs {
         .groupBy(col("u"))
         .agg(max(struct(col("cnt").as("c"), (-col("lbl")).as("nl"))).as("m"))
         .select(col("u").as("node"), (-col("m.nl")).as("lbl"))
-        .transform(cut)
+        .transform(Scale.materialize)
     }
     labels
   }
@@ -358,7 +335,7 @@ object Graphs {
       .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .distinct()
       .repartition(p, col("u"))
-      .transform(cut)
+      .transform(Scale.materialize)
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -371,7 +348,7 @@ object Graphs {
         e = e
           .join(doomed.withColumnRenamed("node", "u"), Seq("u"), "left_anti")
           .join(doomed.withColumnRenamed("node", "v"), Seq("v"), "left_anti")
-          .transform(cut)
+          .transform(Scale.materialize)
         i += 1
       }
     }

@@ -31,163 +31,15 @@ import org.apache.spark.sql.functions._
   */
 object Packing {
 
-  /** A scope of pinned phase-1 localCheckpoint handles. Each two-phase
-    * operator registers the frames it pins into the CURRENT scope
-    * ([[scopedCheckpoints]] installs a fresh one per block; outside any
-    * block the process-global default applies), so concurrent pipelines
-    * release their own rounds independently — one caller's release can
-    * no longer unpersist another's still-lazy phase-1 blocks (a
-    * released localCheckpoint cannot be recomputed). Handles are WEAK
-    * so the registry never blocks the GC-based cleanup that already
-    * exists. */
-  final class CheckpointScope private[Packing] () {
-    private val pinned =
-      new scala.collection.mutable.ArrayBuffer[
-        java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]]]
-    private[Packing] def register(r: org.apache.spark.rdd.RDD[_]): Unit =
-      synchronized { pinned += new java.lang.ref.WeakReference(r) }
-    /** Unpersist every still-live handle registered in THIS scope and
-      * clear it. Call AFTER all frames built inside the scope are fully
-      * materialized. Returns the number of RDDs released. */
-    def release(): Int = synchronized {
-      val live = pinned.flatMap(w => Option(w.get()))
-      live.foreach(_.unpersist(blocking = false))
-      pinned.clear()
-      live.size
-    }
-  }
-
-  private val globalScope = new CheckpointScope
-  /** Thread-inheritable current scope — Spark actions execute on the
-    * calling thread, so per-thread scoping is exactly per-pipeline. */
-  private val currentScope =
-    new scala.util.DynamicVariable[CheckpointScope](globalScope)
-
-  /** Run `body` with a FRESH checkpoint scope: every two-phase operator
-    * called inside registers its pinned phase-1 frames into the scope
-    * passed to `body`, not the global registry. The caller materializes
-    * its results, then calls `scope.release()` — concurrent pipelines
-    * (threads, sessions) no longer interfere through the global
-    * [[releaseLocalCheckpoints]]. The scope is NOT auto-released on
-    * exit: a frame returned from the block lazily must stay readable
-    * until the caller has materialized it. */
-  def scopedCheckpoints[T](body: CheckpointScope => T): T = {
-    val s = new CheckpointScope
-    currentScope.withValue(s)(body(s))
-  }
-
-  /** Materialize a phase-1 frame exactly once — the correctness
-    * requirement of every two-phase operator here (the range sampler is
-    * nondeterministic; the driver-side stats and the final pass must
-    * see the SAME partitioning):
-    *
-    *  - `checkpointDir = None` (default): `localCheckpoint` —
-    *    executor-local blocks, fastest, but pinned until GC and
-    *    unrecoverable on executor loss. The handle is registered so
-    *    [[releaseLocalCheckpoints]] can free the blocks explicitly
-    *    once the caller has materialized its results.
-    *  - `checkpointDir = Some(dir)`: RELIABLE `checkpoint()` into
-    *    `dir` — survives executor loss (the cluster-deployment mode),
-    *    no pinned executor storage; files live under `dir` until the
-    *    caller removes them ([[withReliableCheckpoints]] scopes both
-    *    the dir setting and the cleanup). */
-  private[ext] def materializeOnce(df: DataFrame,
-      checkpointDir: Option[String]): DataFrame = checkpointDir match {
-    case None =>
-      // deliberately NOT Scale.cut: this branch's contract is pinned
-      // executor blocks tracked for releaseLocalCheckpoints; reliable
-      // checkpointing is this function's OWN explicit knob above
-      val out = df.localCheckpoint()
-      org.apache.spark.sql.graftbridge.DatasetBridge.backingRdd(out)
-        .foreach(currentScope.value.register)
-      out
-    case Some(dir) =>
-      val sc = df.sparkSession.sparkContext
-      // Component-wise prefix test: the context's checkpoint dir is a
-      // UUID SUBDIRECTORY of whatever setCheckpointDir received, so the
-      // guard accepts dir itself or any path UNDER it — but not a
-      // sibling that merely shares a string prefix (/a/bc must not
-      // satisfy a request for /a/b, or the files land in the other
-      // scope's tree and the wrong cleanup claims them). BOTH sides are
-      // filesystem-qualified first: Spark reports getCheckpointDir
-      // scheme-qualified (file:/…), so a plain-path caller would never
-      // match the raw strings and every call would re-point the dir,
-      // minting a fresh UUID subdir each time.
-      def qualify(p: String): String = {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(sc.hadoopConfiguration).makeQualified(hp).toString
-      }
-      val want = qualify(dir).stripSuffix("/")
-      val alreadyUnder = sc.getCheckpointDir.exists { cur =>
-        val c = qualify(cur).stripSuffix("/")
-        c == want || c.startsWith(want + "/")
-      }
-      if (!alreadyUnder) sc.setCheckpointDir(dir)
-      df.checkpoint()
-  }
-
-  /** Explicitly unpersist every phase-1 localCheckpoint registered in
-    * the GLOBAL scope (created outside any [[scopedCheckpoints]] block)
-    * that the GC has not already collected. Call AFTER all returned
-    * frames are fully materialized — a released checkpoint cannot be
-    * re-read, so a still-lazy groupRank/packConcat result would fail
-    * downstream. Returns the number of RDDs released. This is the
-    * explicit form of the storage-pinning caveat: a session looping
-    * over many rank/pack calls frees each round's blocks
-    * deterministically instead of waiting for the driver GC.
-    * Frames pinned inside a [[scopedCheckpoints]] block are NOT touched
-    * — concurrent pipelines release through their own scope handle. */
-  def releaseLocalCheckpoints(): Int = globalScope.release()
-
-  /** Scope a RELIABLE checkpoint directory: creates a UNIQUE
-    * subdirectory under `dir`, points the Spark context's checkpoint
-    * dir at it, runs `body` (pass the provided `Some(scopeDir)` as the
-    * operators' `checkpointDir` and MATERIALIZE every result inside —
-    * the files are deleted on exit, so a frame escaping the scope
-    * lazily cannot be executed anymore), then removes ONLY that
-    * subdirectory — a caller passing a pre-existing directory keeps
-    * its other contents — and restores the context's prior checkpoint
-    * dir (cleared if there was none). Restoration goes through the
-    * public setCheckpointDir, which nests one fresh UUID level under
-    * the prior path — later checkpoint() calls still land under the
-    * original root, where the original scope's cleanup governs them. */
-  def withReliableCheckpoints[T](
-      spark: org.apache.spark.sql.SparkSession, dir: String)(
-      body: Option[String] => T): T = {
-    val sc = spark.sparkContext
-    val prior = sc.getCheckpointDir
-    val scopeDir = dir.stripSuffix("/") + "/graft-ckpt-" +
-      java.util.UUID.randomUUID().toString
-    sc.setCheckpointDir(scopeDir)
-    try body(Some(scopeDir))
-    finally {
-      val p = new org.apache.hadoop.fs.Path(scopeDir)
-      val fs = p.getFileSystem(sc.hadoopConfiguration)
-      fs.delete(p, true)
-      prior match {
-        case Some(d) => sc.setCheckpointDir(d)
-        // Clearing to None goes through setCheckpointDir(null); its
-        // cluster-mode local-path warning can't handle a null, so only
-        // clear in local mode — on a cluster with no prior dir the
-        // scope dir stays set but deleted, same as the pre-fix
-        // behavior, and the next scope re-points it anyway.
-        case None => if (sc.isLocal) sc.setCheckpointDir(null)
-      }
-      ()
-    }
-  }
-
   /** Per-document packing positions.
     * Output: (id, n_tokens, start_offset, seq_first, seq_last) — a doc
     * spans sequences seq_first..seq_last (inclusive); docs straddle cuts
     * by design in concat-and-chunk. Zero-token documents are dropped
     * (they occupy no stream positions). */
   def packConcat(df: DataFrame, id: String, tokenCount: Column,
-      seqLen: Int, numPartitions: Int = 0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      seqLen: Int, numPartitions: Int = 0): DataFrame = {
     require(seqLen > 0, s"seqLen=$seqLen")
-    withOffsets(df, id, tokenCount, numPartitions,
-        checkpointDir = checkpointDir) { counted =>
+    withOffsets(df, id, tokenCount, numPartitions) { counted =>
       counted.select(col(id), col("n_tokens"),
         (col("end_offset") - col("n_tokens")).as("start_offset"),
         floor((col("end_offset") - col("n_tokens")) / seqLen).as("seq_first"),
@@ -211,11 +63,9 @@ object Packing {
     * replayable by a single window sum (the pk2 gate oracle). */
   def shardByTokens(df: DataFrame, id: String, tokenCount: Column,
       shardTokens: Long, numPartitions: Int = 0,
-      carry: Seq[String] = Nil,
-      checkpointDir: Option[String] = None): DataFrame = {
+      carry: Seq[String] = Nil): DataFrame = {
     require(shardTokens > 0, s"shardTokens=$shardTokens")
-    withOffsets(df, id, tokenCount, numPartitions, carry,
-        checkpointDir) { counted =>
+    withOffsets(df, id, tokenCount, numPartitions, carry) { counted =>
       counted.select(col(id) +: carry.map(col) :+ col("n_tokens") :+
           (col("end_offset") - col("n_tokens")).as("start_offset"): _*)
         .withColumn("shard_id",
@@ -245,12 +95,11 @@ object Packing {
     * 0-based in stream order. Zero-token documents occupy no
     * positions (the [[packConcat]] contract). */
   def packSequences(df: DataFrame, id: String, tokens: Column,
-      seqLen: Int, numPartitions: Int = 0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      seqLen: Int, numPartitions: Int = 0): DataFrame = {
     require(seqLen > 0, s"seqLen=$seqLen")
     val staged = df.select(col(id), tokens.as("__toks"))
     withOffsets(staged, id, size(col("__toks")).cast("long"),
-        numPartitions, carry = Seq("__toks"), checkpointDir) { counted =>
+        numPartitions, carry = Seq("__toks")) { counted =>
       counted
         .select((col("end_offset") - col("n_tokens")).as("__so"),
           posexplode(col("__toks")).as(Seq("__p", "__tok")))
@@ -297,14 +146,13 @@ object Packing {
     *
     * Output: (id, n_tokens, shard_id, seq_in_shard, oversize). */
   def packExamples(df: DataFrame, id: String, tokenCount: Column,
-      seqLen: Int, shardTokens: Long, numPartitions: Int = 0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      seqLen: Int, shardTokens: Long, numPartitions: Int = 0): DataFrame = {
     require(seqLen > 0, s"seqLen=$seqLen")
     require(shardTokens >= seqLen,
       s"packExamples: shardTokens=$shardTokens < seqLen=$seqLen — a " +
         "shard must hold at least one full sequence")
     val sharded = shardByTokens(df, id, tokenCount, shardTokens,
-      numPartitions, checkpointDir = checkpointDir)
+      numPartitions)
     val packed = sharded
       .groupBy(col("shard_id"))
       .agg(sort_array(collect_list(struct(col(id), col("n_tokens"))))
@@ -329,14 +177,12 @@ object Packing {
     * ≪ examples) via the two-phase [[groupRank]], then joins back on
     * the pair — examples of one sequence stay together, nothing
     * corpus-sized sorts globally. */
-  def renumberSequences(packed: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame = {
+  def renumberSequences(packed: DataFrame): DataFrame = {
     val seqs = packed.select(col("shard_id"), col("seq_in_shard"))
       .distinct()
       .withColumn("__g", lit(1))
     val ranked = groupRank(seqs, Seq("__g"),
-        Seq(col("shard_id"), col("seq_in_shard")),
-        checkpointDir = checkpointDir)
+        Seq(col("shard_id"), col("seq_in_shard")))
       .select(col("shard_id"), col("seq_in_shard"),
         (col("gr_rank") - 1L).as("seq_id"))
     packed.join(ranked, Seq("shard_id", "seq_in_shard"))
@@ -402,8 +248,7 @@ object Packing {
     * Output: (id, n_tokens, shard_id, batch_in_shard, oversize). */
   def packBatches(df: DataFrame, id: String, tokenCount: Column,
       maxTokens: Long, maxRows: Int, shardRows: Long = 4096L,
-      numPartitions: Int = 0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      numPartitions: Int = 0): DataFrame = {
     require(maxTokens > 0, s"packBatches: maxTokens=$maxTokens")
     require(maxRows > 0, s"packBatches: maxRows=$maxRows")
     require(shardRows >= maxRows,
@@ -419,7 +264,7 @@ object Packing {
       .withColumn("__g", lit(1))
     val ranked = groupRank(counted, Seq("__g"),
         Seq(col("n_tokens").desc, col(id)),
-        numPartitions = numPartitions, checkpointDir = checkpointDir)
+        numPartitions = numPartitions)
       .select(col(id), col("n_tokens"), (col("gr_rank") - 1L).as("__r"))
     val sharded = ranked
       .withColumn("shard_id", idiv(col("__r"), lit(shardRows)))
@@ -488,16 +333,15 @@ object Packing {
     * state never exceeds `shardRows`. */
   def batchReportWithBoundary(df: DataFrame, id: String,
       tokenCount: Column, maxTokens: Long, maxRows: Int,
-      shardRows: Long = 4096L, numPartitions: Int = 0,
-      checkpointDir: Option[String] = None): DataFrame = {
+      shardRows: Long = 4096L, numPartitions: Int = 0): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
     def idiv(a: Column, b: Column): Column = column(
       org.apache.spark.sql.catalyst.expressions.IntegralDivide(
         expression(a), expression(b)))
     val sharded = batchReport(packBatches(df, id, tokenCount, maxTokens,
-      maxRows, shardRows, numPartitions, checkpointDir))
+      maxRows, shardRows, numPartitions))
     val single = batchReport(packBatches(df, id, tokenCount, maxTokens,
-        maxRows, shardRows = Long.MaxValue, numPartitions, checkpointDir))
+        maxRows, shardRows = Long.MaxValue, numPartitions))
       .select(col("padded_tokens").as("single_padded_tokens"))
     val num = (col("padded_tokens") - col("single_padded_tokens")) *
       1000000L
@@ -570,8 +414,7 @@ object Packing {
     * [[shardByTokens]]: hands `body` a frame (id, n_tokens, end_offset)
     * with end_offset = inclusive global running total in `id` order. */
   private def withOffsets(df: DataFrame, id: String, tokenCount: Column,
-      numPartitions: Int, carry: Seq[String] = Nil,
-      checkpointDir: Option[String] = None)
+      numPartitions: Int, carry: Seq[String] = Nil)
       (body: DataFrame => DataFrame): DataFrame = {
     val spark = df.sparkSession
     val nPart =
@@ -586,20 +429,16 @@ object Packing {
     // on p7, whose input is the full KN scoring chain). localCheckpoint
     // cuts lineage, so however expensive the input, it runs exactly
     // once; the checkpointed rows are narrow (id, carry, n_tokens).
-    // Cluster caveats of the default local path (documented not
-    // hidden): the blocks pin MEMORY_AND_DISK storage until GC or an
-    // explicit releaseLocalCheckpoints(), and localCheckpoint data is
-    // NOT recoverable on executor loss (the job fails rather than
-    // recomputing lineage). A long-lived cluster deployment with
-    // executor churn passes `checkpointDir` for the RELIABLE path —
-    // see materializeOnce.
-    val counted = materializeOnce(df
+    // Storage follows Scale.materialize: local blocks (pinned until
+    // the checkpoint scope's release, lost on executor loss) unless a
+    // checkpoint dir is set.
+    val counted = Scale.materialize(df
       .select(col(id) +: carry.map(col) :+
         tokenCount.cast("long").as("n_tokens"): _*)
       .where(col("n_tokens") > 0)
       .repartitionByRange(nPart, col(id))
       .sortWithinPartitions(col(id))
-      .withColumn("__pid", spark_partition_id()), checkpointDir)
+      .withColumn("__pid", spark_partition_id()))
     // Phase 2: one row per partition — metadata, not data.
     val totals = counted.groupBy(col("__pid"))
       .agg(sum(col("n_tokens")).as("t"))
@@ -679,21 +518,19 @@ object Packing {
     * nondeterministically), so partition layout cannot change the
     * answer and a single-node window replays it exactly.
     *
-    * The phase-1 frame is materialized ONCE via [[materializeOnce]] —
-    * REQUIRED for correctness, not a cache: the range sampler is
+    * The phase-1 frame is materialized ONCE via [[Scale.materialize]]
+    * — REQUIRED for correctness, not a cache: the range sampler is
     * nondeterministic, so without it phase 2's counts and the final
     * pass could see different partition boundaries and the bases would
-    * be wrong. The default is localCheckpoint (fastest; blocks pinned
-    * until GC or [[releaseLocalCheckpoints]], lost on executor
-    * failure); pass `checkpointDir` for the RELIABLE `checkpoint()`
-    * path a long-lived cluster deployment with executor churn needs —
-    * [[withReliableCheckpoints]] scopes the dir and cleans the files.
+    * be wrong. Local blocks by default (pinned until
+    * [[Scale.releaseLocalCheckpoints]] or the scope's release, lost on
+    * executor failure); reliable files when a checkpoint dir is set —
+    * [[Scale.withReliableCheckpoints]] scopes the dir and cleans them.
     *
     * Output: the input columns plus `gr_rank` (1-based rank within the
     * group under `order`) and `gr_n` (group row count). */
   def groupRank(df: DataFrame, group: Seq[String], order: Seq[Column],
-      numPartitions: Int = 0, maxGroupStats: Int = 1 << 18,
-      checkpointDir: Option[String] = None): DataFrame = {
+      numPartitions: Int = 0, maxGroupStats: Int = 1 << 18): DataFrame = {
     require(group.nonEmpty, "groupRank: need at least one group column")
     require(order.nonEmpty, "groupRank: need an order")
     Seq("gr_rank", "gr_n", "__gr_pid").foreach(n =>
@@ -704,9 +541,9 @@ object Packing {
       if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
     val gc = group.map(col)
-    val parted = materializeOnce(df
+    val parted = Scale.materialize(df
       .repartitionByRange(nPart, gc ++ order: _*)
-      .withColumn("__gr_pid", spark_partition_id()), checkpointDir)
+      .withColumn("__gr_pid", spark_partition_id()))
     val stats = parted
       .groupBy(col("__gr_pid") +: gc: _*)
       .agg(count(lit(1)).as("__gr_c"))

@@ -18,43 +18,117 @@ object Scale {
 
   import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
-  /** Lineage cut for iterative / multi-reference plans (connected-
-    * component rounds, Lloyd rounds, frames feeding several downstream
-    * references): a RELIABLE `checkpoint` when the SparkContext has a
-    * checkpoint dir configured (`setCheckpointDir` — the cluster
-    * deployment, where executor loss must not force a recompute of an
-    * iteration chain), else `localCheckpoint` (executor-local storage,
-    * the single-box default — cheaper, and loss-tolerance is moot with
-    * one JVM). Always eager: callers cut lineage exactly because the
-    * next step re-references the frame.
+  /** Eager materialization — the one way library code cuts lineage
+    * (iteration rounds, frames feeding several downstream references,
+    * two-phase operators whose phases must see the same rows). Runs
+    * the frame's plan once and returns a frame over the stored rows:
+    * a RELIABLE checkpoint when the SparkContext has a checkpoint dir
+    * (`setCheckpointDir` or [[withReliableCheckpoints]] — the cluster
+    * deployment, where executor loss must not force a recompute), else
+    * local executor blocks (the single-box default). The result
+    * declares the partitioning and ordering the run actually delivered
+    * and its measured bytes as its size, so downstream joins reuse the
+    * layout and the planner broadcasts it when it fits.
     *
-    * Lifecycle: reliable-path files persist under the dir after the
-    * job (standard Spark semantics) — deployments rotate the dir or
-    * set `spark.cleaner.referenceTracking.cleanCheckpoints=true`.
-    * [[Packing.materializeOnce]] deliberately does NOT route here: its
-    * local branch tracks pinned blocks for explicit release and its
-    * reliable branch is a per-call knob with scoped cleanup. */
-  private[ext] def cut(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      df.checkpoint(true)
-    else df.localCheckpoint(true)
+    * The backing RDD registers in the current [[CheckpointScope]]:
+    * local blocks stay pinned until the scope's `release()` (or the
+    * ContextCleaner, once the frame is unreachable); reliable files
+    * live under the dir until the caller removes them. */
+  private[graft] def materialize(df: DataFrame): DataFrame = {
+    val reliable = df.sparkSession.sparkContext.getCheckpointDir.isDefined
+    val (out, rdd) =
+      org.apache.spark.sql.graftbridge.DatasetBridge.materialize(df, reliable)
+    currentScope.value.register(rdd)
+    out
+  }
 
-  /** Actual storage footprint of a [[cut]]-materialized frame (mem +
-    * disk bytes of the backing localCheckpoint RDD), when known. The
-    * point: a frame that went through [[cut]] has a REAL size, unlike
-    * the Long.MaxValue default stats a LogicalRDD reports to the
-    * planner — so callers can make size-gated plan choices (broadcast
-    * vs shuffle join) from measurement instead of estimates. Returns
-    * None for reliable-checkpoint frames (files, not blocks) and
-    * anything not RDD-backed — callers must treat None as "assume
-    * big". */
-  private[ext] def materializedBytes(df: DataFrame): Option[Long] =
-    org.apache.spark.sql.graftbridge.DatasetBridge.backingRdd(df)
-      .flatMap { r =>
-        df.sparkSession.sparkContext.getRDDStorageInfo
-          .find(_.id == r.id)
-          .map(i => i.memSize + i.diskSize)
+  /** A scope of [[materialize]]d RDDs. Operators register what they
+    * pin into the CURRENT scope ([[scopedCheckpoints]] installs a fresh
+    * one per block; outside any block the process-global default
+    * applies), so concurrent pipelines release their own frames
+    * independently — one caller's release never unpersists another's
+    * still-lazy blocks (a released local checkpoint cannot be
+    * recomputed). Handles are WEAK, so the registry never blocks the
+    * GC-based cleanup. */
+  final class CheckpointScope private[Scale] () {
+    private val pinned =
+      new scala.collection.mutable.ArrayBuffer[
+        java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]]]
+    private[Scale] def register(r: org.apache.spark.rdd.RDD[_]): Unit =
+      synchronized {
+        pinned.filterInPlace(_.get() != null)
+        pinned += new java.lang.ref.WeakReference(r)
       }
+    /** Unpersist every still-live handle registered in THIS scope and
+      * clear it. Call AFTER all frames built inside the scope are fully
+      * materialized. Returns the number of RDDs released. */
+    def release(): Int = synchronized {
+      val live = pinned.flatMap(w => Option(w.get()))
+      live.foreach(_.unpersist(blocking = false))
+      pinned.clear()
+      live.size
+    }
+  }
+
+  private val globalScope = new CheckpointScope
+  /** Thread-inheritable current scope — Spark actions execute on the
+    * calling thread, so per-thread scoping is exactly per-pipeline. */
+  private val currentScope =
+    new scala.util.DynamicVariable[CheckpointScope](globalScope)
+
+  /** Run `body` with a FRESH checkpoint scope: every materialization
+    * inside registers into the scope passed to `body`, not the global
+    * registry. The caller materializes its results, then calls
+    * `scope.release()`. The scope is NOT auto-released on exit: a frame
+    * returned from the block lazily must stay readable until the caller
+    * has materialized it. */
+  def scopedCheckpoints[T](body: CheckpointScope => T): T = {
+    val s = new CheckpointScope
+    currentScope.withValue(s)(body(s))
+  }
+
+  /** Unpersist every materialization registered in the GLOBAL scope
+    * (made outside any [[scopedCheckpoints]] block) that the GC has not
+    * already collected. Call AFTER all returned frames are fully
+    * materialized — a released local checkpoint cannot be re-read, so a
+    * still-lazy result would fail downstream. Returns the number of
+    * RDDs released. Frames pinned inside a [[scopedCheckpoints]] block
+    * are NOT touched. */
+  def releaseLocalCheckpoints(): Int = globalScope.release()
+
+  /** Scope a RELIABLE checkpoint directory: creates a UNIQUE
+    * subdirectory under `dir`, points the Spark context's checkpoint
+    * dir at it, runs `body` (MATERIALIZE every result inside — the
+    * files are deleted on exit, so a frame escaping the scope lazily
+    * cannot be executed anymore), then removes ONLY that subdirectory —
+    * a caller passing a pre-existing directory keeps its other contents
+    * — and restores the context's prior checkpoint dir (cleared if there
+    * was none). Restoration goes through the public setCheckpointDir,
+    * which nests one fresh UUID level under the prior path — later
+    * checkpoints still land under the original root, where the original
+    * scope's cleanup governs them. */
+  def withReliableCheckpoints[T](spark: SparkSession, dir: String)(
+      body: => T): T = {
+    val sc = spark.sparkContext
+    val prior = sc.getCheckpointDir
+    val scopeDir = dir.stripSuffix("/") + "/graft-ckpt-" +
+      java.util.UUID.randomUUID().toString
+    sc.setCheckpointDir(scopeDir)
+    try body
+    finally {
+      val p = new org.apache.hadoop.fs.Path(scopeDir)
+      p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
+      prior match {
+        case Some(d) => sc.setCheckpointDir(d)
+        // Clearing to None goes through setCheckpointDir(null); its
+        // cluster-mode local-path warning can't handle a null, so only
+        // clear in local mode — on a cluster with no prior dir the
+        // scope dir stays set but deleted, and the next scope re-points
+        // it anyway.
+        case None => if (sc.isLocal) sc.setCheckpointDir(null)
+      }
+    }
+  }
 
   /** Parallelism floor for a CPU-heavy narrow stage (gram explosion,
     * signature computation, tokenization): when the frame's planned

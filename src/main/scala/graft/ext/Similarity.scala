@@ -325,7 +325,7 @@ object Similarity {
       cent = cent.join(means, Seq("centroid_id"), "left")
         .select(col("centroid_id"),
           coalesce(col("new_vec"), col("centroid_vec")).as("centroid_vec"))
-        .transform(Scale.cut)
+        .transform(Scale.materialize)
     }
     cent
   }

@@ -654,7 +654,7 @@ object TextAnalysis {
     // keeps the upstream subtree — often a full-corpus knCounts — from
     // re-executing per consumer. Model-sized rows, so the checkpoint
     // is small (same storage caveat as Packing.groupRank).
-    val tri = triModel.where(col("c3") >= minCount).transform(Scale.cut)
+    val tri = Scale.materialize(triModel.where(col("c3") >= minCount))
     val ctx = tri.groupBy(col("w1"), col("w2"))
       .agg(sum(col("c3")).as("c2"), count(lit(1)).as("n3d"))
     val cont = tri.groupBy(col("w2"), col("w3"))
@@ -697,35 +697,19 @@ object TextAnalysis {
         s"$bound at scale=$scale (2^63 / (dDen*scale)) — use a smaller " +
         "scale (terms only need ordering resolution)")
 
-    // Size-gated broadcast of the model sides: tri is eagerly
-    // materialized by the cut above, so its REAL storage size is
-    // known (Scale.materializedBytes) — when it fits the session's
-    // autoBroadcastJoinThreshold, all five model joins broadcast and
-    // the scoring pass is ONE codegen stage over the exploded
-    // trigrams (the default was five sort-merge joins with their
-    // exchanges, because a LogicalRDD reports Long.MaxValue stats and
-    // can never auto-broadcast). A web-scale model keeps the shuffle
-    // path: the gate is measured bytes, not a local-mode constant.
-    // The derived frames (ctx/cont/mid/uni) are group-bys of tri and
-    // strictly smaller.
-    // `spark.graft.kn.modelBroadcast=off` disables the gate (keeps the
-    // un-hinted r17 shape) — an A/B knob for scale probes, not a tuning
-    // surface; the default is always the measured gate.
-    val bcThresh =
-      docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val gateOff = docs.sparkSession.conf
-      .getOption("spark.graft.kn.modelBroadcast").contains("off")
-    val modelFits = !gateOff && bcThresh > 0 &&
-      Scale.materializedBytes(tri).exists(_ <= bcThresh)
-    def side(m: DataFrame): DataFrame = if (modelFits) broadcast(m) else m
+    // tri is materialized with its measured size, and ctx/cont/mid/uni
+    // are group-bys of it, so the planner broadcasts all five model
+    // sides on its own whenever they fit autoBroadcastJoinThreshold
+    // (the scoring pass is then ONE codegen stage over the exploded
+    // trigrams); a web-scale model keeps the shuffle joins.
     docs.select(col(id), explode(lmTrigrams(text)).as("t"))
       .select(col(id), col("t.w1").as("w1"), col("t.w2").as("w2"),
         col("t.w3").as("w3"))
-      .join(side(tri), Seq("w1", "w2", "w3"), "left")
-      .join(side(ctx), Seq("w1", "w2"), "left")
-      .join(side(cont), Seq("w2", "w3"), "left")
-      .join(side(mid), Seq("w2"), "left")
-      .join(side(uni), Seq("w3"), "left")
+      .join(tri, Seq("w1", "w2", "w3"), "left")
+      .join(ctx, Seq("w1", "w2"), "left")
+      .join(cont, Seq("w2", "w3"), "left")
+      .join(mid, Seq("w2"), "left")
+      .join(uni, Seq("w3"), "left")
       .withColumn("bsz", lit(bsz))
       .withColumn("pcont",
         expr(s"coalesce(cn1, 0L) * ${scale}L div bsz"))
@@ -1886,7 +1870,7 @@ object TextAnalysis {
     // in the join); a localCheckpoint materializes it exactly once —
     // a model is reference-set-sized, so the checkpoint is small.
     val tokenCountsEff =
-      if (broadcastModel.isEmpty) tokenCounts.transform(Scale.cut)
+      if (broadcastModel.isEmpty) tokenCounts.transform(Scale.materialize)
       else tokenCounts
     val doBroadcast = broadcastModel.getOrElse {
       val threshold = broadcastThresholdBytes(docs.sparkSession)

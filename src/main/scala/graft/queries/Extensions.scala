@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ext.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.ext.{Dedup, Multimodal, Scale, Similarity, TextAnalysis}
 import graft.streaming.EventStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1222,7 +1222,7 @@ object ExtensionQueries {
         .agg(count(lit(1)).as("n_hit")))
       .select(col("n_exact"), col("n_approx"), col("n_hit"),
         expr("n_hit * 1000000L div n_exact").as("recall_ppm"))
-      .localCheckpoint()
+      .transform(Scale.materialize)
     // measured kept-pair recall at the pruned knobs: 385869 ppm
     // (sf0.001: 71/184 exact pairs survive, 197 mined) and 465517 ppm
     // (sf0.01: 81/174, 206 mined) — in line with the s22/s23 mined
@@ -1400,7 +1400,7 @@ object ExtensionQueries {
     val c = corpus(s, d)
     val q = queriesDf(s, d)
     // one exact list serves all three tier comparisons: Q·k rows
-    val brute = Similarity.bruteForceTopK(c, q, k = 5).localCheckpoint()
+    val brute = Scale.materialize(Similarity.bruteForceTopK(c, q, k = 5))
     def rep(tier: String, approx: DataFrame): DataFrame =
       Similarity.recallReport(approx, brute)
         .select(lit(tier).as("tier"), col("query_id"), col("k"),
@@ -1411,7 +1411,7 @@ object ExtensionQueries {
         nlist = 20, nprobe = 5, rerank = 20)))
       .unionAll(rep("sq8", Similarity.sq8TopK(c, q, k = 5, rerank = 20)))
       .orderBy("tier", "query_id")
-      .localCheckpoint()
+      .transform(Scale.materialize)
     // Floors: conservative bounds under the MEASURED mean recall at
     // sf0.001/0.01/0.1 (exact-integer pipelines — recall per SF is
     // deterministic, so a breach is a code regression, not noise).
@@ -1461,7 +1461,7 @@ object ExtensionQueries {
           nprobe = nprobe, m = 8, codes = 16, rerank = 100),
         Similarity.bruteForceTopK(c, q, k = 5))
       .orderBy("query_id")
-      .localCheckpoint()
+      .transform(Scale.materialize)
     val m = report.agg(sum(col("recall_ppm")).as("s"),
       count(lit(1)).as("n")).head
     val mean = m.getLong(0) / m.getLong(1)
@@ -2667,7 +2667,7 @@ object ExtensionQueries {
         col("embedding").as("cvec"), col("label").as("clab")),
       queries, k = 5)
     val report = Similarity.recallReport(mined, brute)
-      .orderBy("query_id").localCheckpoint()
+      .orderBy("query_id").transform(Scale.materialize)
     // measured mean recall: 440k ppm (sf0.001), 360k (sf0.01) — in
     // line with the s18 ivfpq tier at the same knobs (400k→140k decay
     // family); individual queries can read 0 when their cross-label
@@ -2709,7 +2709,7 @@ object ExtensionQueries {
         col("embedding").as("cvec"), col("label").as("clab")),
       queries, k = 5)
     val report = Similarity.recallReport(mined, brute)
-      .orderBy("query_id").localCheckpoint()
+      .orderBy("query_id").transform(Scale.materialize)
     // measured mean recall: 560k ppm (sf0.001), 420k (sf0.01) vs the
     // fixed-knob s22 tier's 440k/360k — scaling the knobs with the
     // corpus recovers recall for mining as s19 pinned for serving
@@ -3246,7 +3246,7 @@ object ExtensionQueries {
     // previous refresh persisted), so the refresh below provably cannot
     // have re-read the old footers for these stats.
     val prev = graft.ext.Scale.zoneMap(s, dir, Seq("l_orderkey"))
-      .localCheckpoint()
+      .transform(Scale.materialize)
     li.where(col("l_orderkey") > mid)
       .repartitionByRange(4, col("l_orderkey"))
       .sortWithinPartitions("l_orderkey")

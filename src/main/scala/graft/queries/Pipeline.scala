@@ -659,7 +659,7 @@ object PipelineQueries {
     val docs8 = Curation.curateKept(corpus, "text", "doc_id",
         bench, "text", minWords = 30L, minStopHits = 1L,
         nearDup = Some(Dedup.MinHashConfig()))
-      .localCheckpoint()
+      .transform(graft.ext.Scale.materialize)
     val tiers = Curation.perplexityBuckets(docs8, "text", "doc_id",
       col("lang"), TextAnalysis.knCounts(docs8, "text"),
       nBuckets = 3, minCount = 2L)

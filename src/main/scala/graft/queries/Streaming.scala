@@ -380,7 +380,7 @@ object StreamingQueries {
              graft.ext.Scale.zoneMap(s, tableDir, Seq("l_orderkey"))
            else graft.ext.Scale.zoneMapIncremental(s, tableDir,
              Seq("l_orderkey"), mapSoFar))
-          .localCheckpoint()
+          .transform(graft.ext.Scale.materialize)
         ()
       }
       .trigger(Trigger.AvailableNow()).start()
@@ -500,7 +500,7 @@ object StreamingQueries {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val i = inc(batch)
         state = (if (state == null) i else merge(state, i))
-          .localCheckpoint()
+          .transform(graft.ext.Scale.materialize)
         ()
       }
       .trigger(Trigger.AvailableNow()).start()
@@ -530,8 +530,8 @@ object StreamingQueries {
     val q = src.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val (ia, ib) = inc(batch)
-        a = (if (a == null) ia else mergeA(a, ia)).localCheckpoint()
-        b = (if (b == null) ib else mergeB(b, ib)).localCheckpoint()
+        a = graft.ext.Scale.materialize(if (a == null) ia else mergeA(a, ia))
+        b = graft.ext.Scale.materialize(if (b == null) ib else mergeB(b, ib))
         ()
       }
       .trigger(Trigger.AvailableNow()).start()
@@ -749,7 +749,7 @@ object StreamingQueries {
     // the index per batch is per-batch latency a long-running stream
     // should not pay
     val (grams0, n) = graft.ext.Decontam.loadSetIndex(s, root)
-    val grams = grams0.localCheckpoint()
+    val grams = graft.ext.Scale.materialize(grams0)
     val corpusSrc = stageTwoHalves(HygieneQueries.decontamCorpus(s, d),
       "doc_id", "graft_st30_c_src_")
     val (perSet, total) = foldParquetStream2(s, corpusSrc, docTextSchema)(
@@ -777,8 +777,8 @@ object StreamingQueries {
     // hashed probe relation since r14, matching the d22 gate's switch
     // (same oracle pins both — counts equal string semantics absent a
     // surfaced-as-row-diff collision)
-    val grams = graft.ext.Decontam
-      .curveGramsHashed(bench, "text", "eval_set", ns).localCheckpoint()
+    val grams = graft.ext.Scale.materialize(graft.ext.Decontam
+      .curveGramsHashed(bench, "text", "eval_set", ns))
     val corpusSrc = stageTwoHalves(HygieneQueries.decontamCorpus(s, d),
       "doc_id", "graft_st33_c_src_")
     val (perSetN, total) = foldParquetStream2(s, corpusSrc, docTextSchema)(

@@ -48,6 +48,55 @@ class IngestExportSpec extends AnyFunSuite {
     assert(log.count() >= 3) // temp dir + download + processed + completed
   }
 
+  /** (action, files, valid, invalid) of the run's one completion row
+    * in the audit log. */
+  private def completionRow(ref: TableRef): (String, Long, Long, Long) = {
+    val rows = spark.table(s"${ref.database}.box_ingestion_log")
+      .where("job_action LIKE 'Ingest completed%'")
+      .select("job_action", "log_info").collect()
+    assert(rows.length === 1, rows.mkString("; "))
+    val Counts = """(\d+) files, (\d+) valid, (\d+) invalid rows""".r
+    rows.head.getString(1) match {
+      case Counts(f, v, i) => (rows.head.getString(0), f.toLong, v.toLong, i.toLong)
+      case other => fail(s"unparseable completion row: $other")
+    }
+  }
+
+  test("ingest report agrees with the audit log: validate mode with " +
+      "planted invalid rows") {
+    val dir = Files.createTempDirectory("ing_agree_")
+    Files.writeString(dir.resolve("data_1.csv"),
+      "id,amount,note\n1,2.5,ok\n,3.0,missing-id\n2,bad,bad-amount\n3,,ok\n")
+    Files.writeString(dir.resolve("data_2.csv"),
+      "id,amount,note\n4,1.0,ok\n5,2.0,ok\nx,1.0,bad-id\n6,3.0,ok\n")
+    val ref = freshRef("agree1")
+    val report = Ingest.execute(IngestConfig(
+      "tester", ref, dir.toString, "data_.*\\.csv",
+      metadata = Some(meta), justCopy = false))
+    assert(report.ok, report.errors.mkString("; "))
+    assert((report.processedFiles.size, report.validRows, report.invalidRows)
+      === ((2, 5L, 3L)))
+    assert(completionRow(ref) === (("Ingest completed",
+      report.processedFiles.size.toLong, report.validRows, report.invalidRows)))
+  }
+
+  test("ingest report agrees with the audit log: one unreadable file") {
+    val dir = Files.createTempDirectory("ing_agree_bad_")
+    Files.writeString(dir.resolve("data_1.csv"),
+      "id,amount,note\n1,2.5,ok\n,3.0,missing-id\n")
+    Files.write(dir.resolve("data_2.xlsx"), "not a workbook".getBytes)
+    val ref = freshRef("agree2")
+    val report = Ingest.execute(IngestConfig(
+      "tester", ref, dir.toString, "data_.*",
+      metadata = Some(meta), justCopy = false))
+    assert(!report.ok && report.errors.exists(_.contains("data_2.xlsx")),
+      report.errors.mkString("; "))
+    assert(report.processedFiles === Seq("data_1.csv"))
+    assert((report.validRows, report.invalidRows) === ((1L, 1L)))
+    assert(completionRow(ref) === (("Ingest completed with errors",
+      report.processedFiles.size.toLong, report.validRows, report.invalidRows)))
+  }
+
   test("ingest provenance: rows carry their source file; zip members use inner names") {
     val dir = Files.createTempDirectory("ing_prov_")
     Files.writeString(dir.resolve("plain.csv"), "id,amount,note\n1,1.0,a\n")

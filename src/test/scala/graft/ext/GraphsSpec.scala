@@ -66,13 +66,17 @@ class GraphsSpec extends AnyFunSuite {
       .orderBy("node").as[(Long, Long)].collect().toSeq
     val dir = java.nio.file.Files
       .createTempDirectory("graft_ckpt_").toString
-    // context-level setting; it stays on for the rest of the JVM, which
-    // only makes later graph tests use reliable checkpoints too
-    spark.sparkContext.setCheckpointDir(dir)
-    assert(Graphs.triangleCounts(edges, "src", "dst")
-      .orderBy("node").as[(Long, Long)].collect().toSeq === before)
-    assert(Graphs.pageRank(edges, "src", "dst", iters = 3, topK = 3)
-      .collect().nonEmpty)
+    // context-level setting, restored afterwards: every later suite's
+    // materializations would otherwise go reliable too
+    val sc = spark.sparkContext
+    val prior = sc.getCheckpointDir
+    sc.setCheckpointDir(dir)
+    try {
+      assert(Graphs.triangleCounts(edges, "src", "dst")
+        .orderBy("node").as[(Long, Long)].collect().toSeq === before)
+      assert(Graphs.pageRank(edges, "src", "dst", iters = 3, topK = 3)
+        .collect().nonEmpty)
+    } finally sc.setCheckpointDir(prior.orNull)
     val written = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .filter(java.nio.file.Files.isRegularFile(_)).count()
     assert(written > 0, "reliable checkpoint files were written under " +

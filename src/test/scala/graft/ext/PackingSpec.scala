@@ -226,30 +226,6 @@ class PackingSpec extends AnyFunSuite {
     assert(wAll === 0L, s"single shard must read 0, got $wAll")
   }
 
-  test("materializeOnce: a plain-path checkpointDir matching the " +
-      "current scheme-qualified dir is accepted — no re-point, no " +
-      "fresh UUID subdir per call") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckq_")
-      .resolve("ck").toString
-    val sc = spark.sparkContext
-    val prior = sc.getCheckpointDir
-    try {
-      sc.setCheckpointDir(dir)
-      // Spark reports the dir scheme-qualified (file:/...) + one UUID
-      // level; a plain-path caller must still match it
-      val cur = sc.getCheckpointDir.get
-      assert(cur.startsWith("file:"), s"precondition: $cur")
-      Packing.materializeOnce(spark.range(10).toDF("x"), Some(dir))
-        .count()
-      assert(sc.getCheckpointDir.get === cur,
-        "materializeOnce re-pointed the checkpoint dir despite the " +
-          "current dir already sitting under the requested path")
-    } finally prior match {
-      case Some(d) => sc.setCheckpointDir(d)
-      case None => if (sc.isLocal) sc.setCheckpointDir(null)
-    }
-  }
-
   test("checkpointDir knob: reliable path is value-identical to the " +
       "local path, files live under the dir and are cleaned on scope " +
       "exit; releaseLocalCheckpoints frees the local-path blocks") {
@@ -265,29 +241,29 @@ class PackingSpec extends AnyFunSuite {
     val sentinel = new org.apache.hadoop.fs.Path(dir, "caller_data.txt")
     fs.create(sentinel, true).close()
     val priorCk = spark.sparkContext.getCheckpointDir
-    val got = Packing.withReliableCheckpoints(spark, dir) { ck =>
-      // the scope dir handed to operators is a UNIQUE subdir of dir
-      assert(ck.exists(_.startsWith(dir.stripSuffix("/") + "/")),
+    val (got, pc) = Scale.withReliableCheckpoints(spark, dir) {
+      // the scope dir is a UNIQUE subdir of dir
+      val ck = spark.sparkContext.getCheckpointDir
+      assert(ck.exists(_.contains(dir.stripSuffix("/") + "/graft-ckpt-")),
         s"scope dir $ck must be a subdirectory of $dir")
       val rank = Packing.groupRank(rankFrame, Seq("lang"),
-          Seq(col("score").desc, col("id")), numPartitions = 4,
-          checkpointDir = ck)
+          Seq(col("score").desc, col("id")), numPartitions = 4)
         .select("id", "lang", "score", "gr_rank", "gr_n")
         .orderBy("id").collect().map(_.toSeq).toSeq
       // the reliable checkpoint wrote real files under the scope dir
       val sp = new org.apache.hadoop.fs.Path(ck.get)
       assert(fs.exists(sp) &&
         fs.listStatus(sp).nonEmpty, "expected checkpoint files under dir")
-      // packConcat through the same knob, same values as the default
       val pc = Packing.packConcat(rankFrame, "id", col("score") + 1,
-          seqLen = 5, checkpointDir = ck)
-        .orderBy("id").collect().map(_.toSeq).toSeq
-      val pcLocal = Packing.packConcat(rankFrame, "id", col("score") + 1,
           seqLen = 5)
         .orderBy("id").collect().map(_.toSeq).toSeq
-      assert(pc === pcLocal)
-      rank
+      (rank, pc)
     }
+    // packConcat on the local path, same values as the reliable one
+    val pcLocal = Packing.packConcat(rankFrame, "id", col("score") + 1,
+        seqLen = 5)
+      .orderBy("id").collect().map(_.toSeq).toSeq
+    assert(pc === pcLocal)
     assert(got === want)
     // scope exit removed the scope's own subdirectory — and ONLY it:
     // the caller's pre-existing file survives, no graft-ckpt leftover
@@ -310,7 +286,7 @@ class PackingSpec extends AnyFunSuite {
     // the local path pinned blocks; explicit release frees them all
     val persisted0 = spark.sparkContext.getPersistentRDDs.size
     assert(persisted0 > 0, "local-path checkpoints should be pinned")
-    val released = Packing.releaseLocalCheckpoints()
+    val released = Scale.releaseLocalCheckpoints()
     assert(released > 0)
     assert(spark.sparkContext.getPersistentRDDs.size < persisted0)
   }
@@ -318,15 +294,15 @@ class PackingSpec extends AnyFunSuite {
   test("scopedCheckpoints: a scope's pinned frames are invisible to the " +
       "global releaseLocalCheckpoints and freed only by its own " +
       "release (r11 advice: concurrent pipelines must not interfere)") {
-    Packing.releaseLocalCheckpoints() // drain any global leftovers
-    val (ranked, scope) = Packing.scopedCheckpoints { s =>
+    Scale.releaseLocalCheckpoints() // drain any global leftovers
+    val (ranked, scope) = Scale.scopedCheckpoints { s =>
       val r = Packing.groupRank(rankFrame, Seq("lang"),
         Seq(col("score").desc, col("id")), numPartitions = 4)
       (r, s)
     }
     // another pipeline's global release must NOT kill this scope's
     // phase-1 blocks while `ranked` is still lazy...
-    assert(Packing.releaseLocalCheckpoints() === 0,
+    assert(Scale.releaseLocalCheckpoints() === 0,
       "global release must not see scope-pinned frames")
     // ...so the scoped frame still executes correctly afterwards
     val got = ranked.select("id", "lang", "score", "gr_rank", "gr_n")
@@ -335,33 +311,6 @@ class PackingSpec extends AnyFunSuite {
     // the scope's own release frees its blocks
     assert(scope.release() > 0)
     assert(scope.release() === 0, "release is idempotent")
-  }
-
-  test("materializeOnce reliable-path guard: a sibling dir sharing a " +
-      "string prefix does not satisfy the request (r11 advice)") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_ckpfx_").toString.stripSuffix("/")
-    val sc = spark.sparkContext
-    val prior = sc.getCheckpointDir
-    try {
-      sc.setCheckpointDir(s"$base/ab_sibling")
-      // request dir=$base/ab — /ab_sibling/<uuid> startsWith "$base/ab"
-      // as a STRING, but is not under it as a PATH; the files must
-      // land under $base/ab
-      Packing.packConcat(rankFrame, "id", col("score") + 1, seqLen = 5,
-          checkpointDir = Some(s"$base/ab"))
-        .count()
-      val want = new org.apache.hadoop.fs.Path(s"$base/ab")
-      val fs = want.getFileSystem(sc.hadoopConfiguration)
-      assert(fs.exists(want) && fs.listStatus(want).nonEmpty,
-        "checkpoint files must land under the requested dir, not the " +
-          "string-prefix sibling")
-    } finally {
-      prior match {
-        case Some(d) => sc.setCheckpointDir(d)
-        case None => sc.setCheckpointDir(null)
-      }
-    }
   }
 
   test("packBatches: equals a single-node padded next-fit replica on " +

@@ -2,6 +2,11 @@ package graft.ext
 
 import graft.TestSpark
 import graft.sink.TableRef
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{RDDScanExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -538,18 +543,133 @@ class ScaleSpec extends AnyFunSuite {
     assert(fps <= 60L, s"false-positive count $fps is way over fpp=0.03")
   }
 
-  test("materializedBytes: known size for a materialized frame, None otherwise") {
-    // The knScoreModel broadcast gate rests on this: a localCheckpoint-
-    // backed frame reports its true storage size; anything else reports
-    // None (and the caller must keep the shuffle path).
-    val plain = spark.range(0, 2000).select(col("id"), lit("x").as("s"))
-    assert(Scale.materializedBytes(plain).isEmpty)
-    val mat = plain.localCheckpoint()
-    // try/finally: an assertion failure must not leak pinned blocks
-    // into the shared TestSpark session used by later suites.
+  /** The scan over a materialized frame, with the RDD it reads. */
+  private def scanOf(df: org.apache.spark.sql.DataFrame): RDDScanExec =
+    df.queryExecution.sparkPlan.collectFirst { case s: RDDScanExec => s }
+      .getOrElse(fail(s"not RDD-backed:\n${df.queryExecution.sparkPlan}"))
+
+  /** The physical plan with exchanges and sort elision applied. */
+  private def planOf(df: org.apache.spark.sql.DataFrame): SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+
+  test("materialize: a kept repartition(p, col) is declared exactly — " +
+      "same count as the RDD, rows placed by that hash, no re-shuffle") {
+    val df = (0L until 1000L).toDF("k").withColumn("v", col("k") % 7)
+    val m = Scale.materialize(df.repartition(5, col("v")))
+    val scan = scanOf(m)
+    scan.outputPartitioning match {
+      case h: HashPartitioning =>
+        assert(h.numPartitions === 5)
+        assert(h.numPartitions === scan.rdd.getNumPartitions)
+      case other => fail(s"expected hashpartitioning(v, 5), got $other")
+    }
+    assert(m.where(spark_partition_id() =!= pmod(hash(col("v")), lit(5)))
+      .count() === 0L, "a row sits outside its declared hash partition")
+    val agg = planOf(m.groupBy("v").count())
+    assert(agg.collect { case e: Exchange => e }.isEmpty,
+      s"aggregation on the declared key must not re-shuffle\n$agg")
+  }
+
+  test("materialize: an AQE-coalesced groupBy never declares the " +
+      "pre-coalesce partition count") {
+    val shuffleParts = spark.sessionState.conf.numShufflePartitions
+    val m = Scale.materialize(spark.range(0, 1000)
+      .groupBy((col("id") % 3).as("g")).count())
+    val scan = scanOf(m)
+    val n = scan.rdd.getNumPartitions
+    assert(n < shuffleParts,
+      s"precondition: AQE should coalesce $shuffleParts tiny partitions")
+    scan.outputPartitioning match {
+      case h: HashPartitioning => assert(h.numPartitions === n)
+      case other => assert(other.numPartitions === n, s"$other")
+    }
+  }
+
+  test("materialize: ordering is declared only for a sorted input") {
+    val df = (0L until 500L).map(i => (i * 7919 % 500, i)).toDF("k", "v")
+    val sorted = Scale.materialize(
+      df.repartition(4, col("k")).sortWithinPartitions("k"))
+    val ordering = scanOf(sorted).outputOrdering
+    assert(ordering.map(_.child.references.map(_.name).toSeq) ===
+      Seq(Seq("k")), s"$ordering")
+    val resort = planOf(sorted.sortWithinPartitions("k"))
+    assert(resort.collect { case s: SortExec => s }.isEmpty,
+      s"a sort on the declared order must be elided\n$resort")
+    val unsorted = Scale.materialize(df.repartition(4, col("k")))
+    assert(scanOf(unsorted).outputOrdering.isEmpty)
+  }
+
+  test("materialize: measured bytes let the planner broadcast a frame " +
+      "whose optimizer estimate is over the threshold") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, (1L << 20).toString)
     try {
-      val bytes = Scale.materializedBytes(mat)
-      assert(bytes.exists(_ > 0L), s"expected Some(>0), got $bytes")
-    } finally mat.unpersist(blocking = true)
+      // estimate: the full 8 MB range (filters do not shrink it);
+      // measured: 50 rows
+      val small = spark.range(0, 1000000).where(col("id") < 50).toDF()
+      val probe = spark.range(0, 5000000).toDF()
+      def hasBhj(df: org.apache.spark.sql.DataFrame): Boolean =
+        planOf(df).collect { case j: BroadcastHashJoinExec => j }.nonEmpty
+      assert(!hasBhj(probe.join(small, "id")),
+        "precondition: the estimate alone must not broadcast")
+      val m = Scale.materialize(small)
+      val measured = m.queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(measured > 0 && measured < (1L << 20), s"measured $measured")
+      val joined = probe.join(m, "id")
+      assert(hasBhj(joined),
+        s"expected an un-hinted BroadcastHashJoin\n${planOf(joined)}")
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("materialize: scope release frees the local blocks") {
+    assert(spark.sparkContext.getCheckpointDir.isEmpty,
+      "precondition: local storage")
+    val (m, scope) = Scale.scopedCheckpoints { s =>
+      (Scale.materialize(spark.range(0, 100).toDF("x")), s)
+    }
+    val id = scanOf(m).rdd.id
+    assert(spark.sparkContext.getPersistentRDDs.contains(id))
+    assert(m.count() === 100L)
+    assert(scope.release() === 1)
+    assert(!spark.sparkContext.getPersistentRDDs.contains(id))
+  }
+
+  test("library operators never change shared session state: a second " +
+      "thread sees the caller's AQE flag and checkpoint dir throughout") {
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (2L, 4L),
+      (4L, 5L), (5L, 1L)).toDF("src", "dst")
+    val ranked = (0L until 200L).map(i => (i, if (i % 3 == 0) "a" else "b"))
+      .toDF("id", "lang")
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val dir = spark.sparkContext.getCheckpointDir
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var done = false
+    val poller = new Thread(() => {
+      while (!done) {
+        val a = spark.conf.get("spark.sql.adaptive.enabled")
+        if (a != aqe) seen.add(s"spark.sql.adaptive.enabled=$a")
+        val d = spark.sparkContext.getCheckpointDir
+        if (d != dir) seen.add(s"checkpoint dir=$d")
+        Thread.sleep(1)
+      }
+    })
+    poller.start()
+    try {
+      Graphs.triangleCounts(edges, "src", "dst").collect()
+      Graphs.pageRank(edges, "src", "dst", iters = 3).collect()
+      Packing.groupRank(ranked, Seq("lang"), Seq(col("id")),
+        numPartitions = 4).collect()
+    } finally {
+      done = true
+      poller.join()
+    }
+    assert(seen.isEmpty, s"another thread saw shared state change: $seen")
   }
 }

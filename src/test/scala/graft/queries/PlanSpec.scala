@@ -2,8 +2,11 @@ package graft.queries
 
 import graft.TestSpark
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{RDDScanExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.execution.joins.{HashJoin, SortMergeJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression tests: the scale properties the queries claim
@@ -25,6 +28,40 @@ class PlanSpec extends AnyFunSuite {
 
   private def planString(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** Every node of a physical plan, descending through adaptive
+    * wrappers, query stages and reused exchanges. */
+  private def nodesOf(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => nodesOf(a.executedPlan)
+    case s: QueryStageExec => s +: nodesOf(s.plan)
+    case r: ReusedExchangeExec => r +: nodesOf(r.child)
+    case _ => p +: p.children.flatMap(nodesOf)
+  }
+
+  /** Physical plans of the eager materializations `body` runs (the
+    * checkpoint executions a QueryExecutionListener reports). */
+  private def materializationPlans(expected: Int)(body: => Unit): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(name: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (name == "localCheckpoint" || name == "checkpoint")
+          seen.add(qe.executedPlan)
+      def onFailure(name: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener delivery is asynchronous
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (seen.size < expected && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
 
   test("q6 scan: range predicates are pushed to the parquet reader and columns pruned") {
     val df = Relational.q6ForecastRevenue(spark, sf)
@@ -223,6 +260,41 @@ class PlanSpec extends AnyFunSuite {
     val s = planString(AnalyticsQueries.triangles(spark, sf))
     assert(!s.contains("CartesianProduct"), s)
     assert(!s.contains("BroadcastNestedLoopJoin"), s)
+  }
+
+  test("g1 triangles: the wedge sort-merge join reads both checkpointed " +
+      "arms directly — no Exchange or Sort between join and scan") {
+    val plan = planOf(AnalyticsQueries.triangles(spark, sf))
+    val smjs = nodesOf(plan).collect { case j: SortMergeJoinExec => j }
+    assert(smjs.size === 1, s"expected the one wedge SMJ\n$plan")
+    smjs.head.children.foreach { arm =>
+      val below = nodesOf(arm)
+      assert(below.exists(_.isInstanceOf[RDDScanExec]),
+        s"wedge arm must read the checkpointed edge list\n$arm")
+      assert(!below.exists(n => n.isInstanceOf[Exchange] ||
+          n.isInstanceOf[SortExec]),
+        s"wedge arm re-shuffles or re-sorts the checkpoint\n$arm")
+    }
+  }
+
+  test("g2 pagerank: every per-round join reads hash-partitioned " +
+      "checkpoints; the transpose aggregation's exchange is the only one") {
+    val iters = 5 // AnalyticsQueries.pagerank
+    val rounds = materializationPlans(expected = 3 + iters) {
+      AnalyticsQueries.pagerank(spark, sf).collect()
+    }.filter(p => nodesOf(p).exists(_.isInstanceOf[HashJoin]))
+    assert(rounds.size === iters, "expected one join plan per round")
+    rounds.foreach { round =>
+      val nodes = nodesOf(round)
+      val scans = nodes.collect { case s: RDDScanExec => s }
+      assert(scans.nonEmpty, s"round must read checkpoints\n$round")
+      scans.foreach(s => assert(
+        s.outputPartitioning.isInstanceOf[HashPartitioning],
+        s"round reads an unkeyed checkpoint: ${s.simpleString(200)}\n$round"))
+      val exchanges = nodes.collect { case e: Exchange => e }
+      assert(exchanges.size === 1,
+        s"expected only the transpose exchange\n$round")
+    }
   }
 
   test("item CF: pair expansion joins on the user key only; partial " +

@@ -299,9 +299,8 @@ object Bench {
       math.max(cpusN, math.min(512L, sized)).toInt
     }
 
-    val skew = new StageSkewListener
-    val wantSkew = sys.env.get("SPARK_GRAFT_TASKSTATS").exists(_ != "0")
-    if (wantSkew) spark.sparkContext.addSparkListener(skew)
+    val trace = new Trace(spark.sparkContext)
+    spark.sparkContext.addSparkListener(trace)
 
     // SPARK_GRAFT_BENCH_ONLY=name1,name2 restricts the set (dev iteration).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
@@ -351,9 +350,9 @@ object Bench {
       setSizing(q.name)
       stamps(q.name) = diskStamp()
       cpuStamps(q.name) = cpuStampMs()
-      skew.reset()
+      trace.reset()
       val times = (1 to runs).map(_ => timeOnce(q))
-      if (wantSkew) skew.worst().foreach { case (mx, _, r) =>
+      trace.worst().foreach { case (mx, _, r) =>
         skews(q.name) = (math.rint(r * 100) / 100, mx / 1000.0)
       }
       spreads(q.name) = times.max / math.max(times.min, 1e-9)
@@ -444,11 +443,9 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + round3(v) }
       .mkString("{", ",", "}")
     val total = round3(results.map(_._2).sum)
-    val skewJson = if (skews.nonEmpty)
-      skews.map { case (k, (r, mx)) =>
-        "\"" + k + "\":{\"ratio\":" + r + ",\"max_task_s\":" + mx + "}" }
-        .mkString(",\"task_skew\":{", ",", "}")
-    else ""
+    val skewJson = skews.map { case (k, (r, mx)) =>
+      "\"" + k + "\":{\"ratio\":" + r + ",\"max_task_s\":" + mx + "}" }
+      .mkString(",\"task_skew\":{", ",", "}")
     val stampJson = stamps.map { case (k, v) =>
       "\"" + k + "\":" + math.rint(v * 10) / 10 }
       .mkString(",\"query_disk_mbps\":{", ",", "}")

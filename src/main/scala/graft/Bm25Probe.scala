@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the persisted BM25 index (dev tooling, the
@@ -36,17 +35,7 @@ object Bm25Probe {
     val corpusDir = args(0)
     val rounds = if (args.length > 1) args(1).toInt else 2
     val smallDeletes = if (args.length > 2) args(2).toInt else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bm25-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val skew = new StageSkewListener
-    spark.sparkContext.addSparkListener(skew)
+    val spark = Probe.session("graft-bm25-probe")
 
     val docs = Tables.documents(spark, corpusDir)
       .select(col("doc_id"), col("text"))
@@ -57,13 +46,7 @@ object Bm25Probe {
     val query = Seq("spark", "hash", "join")
 
     def timed(what: String)(f: => Unit): Unit = {
-      skew.reset()
-      val t0 = System.nanoTime()
-      f
-      val wall = (System.nanoTime() - t0) / 1e9
-      val sk = skew.worst().map { case (mx, med, r) =>
-        f" max_task=${mx / 1000.0}%.2f s median=${med / 1000.0}%.2f s ratio=$r%.2f"
-      }.getOrElse(" (no >=8-task stage reached 200 ms)")
+      val (_, wall, sk) = Probe.timed(f)
       println(f"[bm25-probe] $what wall=$wall%.2f s$sk")
     }
 
@@ -115,7 +98,8 @@ object Bm25Probe {
       }
       timed("compact") {
         graft.ext.Bm25Index.compact(spark, root,
-          targetPartitions = cpus.toInt)
+          targetPartitions =
+            spark.conf.get("spark.sql.shuffle.partitions").toInt)
       }
       timed("search(post-compact)") {
         graft.ext.Bm25Index.search(spark, root, query, k = 10)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-probe for the decontamination family with a FIXED benchmark
@@ -27,17 +26,7 @@ object DecontamProbe {
     val corpusDir = args(0)
     val benchDir = args(1)
     val rounds = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-decontam-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val skew = new StageSkewListener
-    spark.sparkContext.addSparkListener(skew)
+    val spark = Probe.session("graft-decontam-probe")
 
     val corpus = Tables.documents(spark, corpusDir)
       .select(col("doc_id"), col("text"))
@@ -48,41 +37,37 @@ object DecontamProbe {
     println(s"[decontam-probe] corpus=${corpus.count()} docs " +
       s"benchmark=${bench.count()} docs (FIXED from $benchDir)")
 
-    def run(name: String, df: => org.apache.spark.sql.DataFrame): Unit = {
-      skew.reset()
-      val t0 = System.nanoTime()
-      // noop WRITE, not count(): the report's left join from the eval-set
-      // relation is key-unique, so a count() lets Catalyst eliminate the
-      // whole corpus-scan subtree (measured 0.4 s "scans" of a corpus
-      // whose raw gram explode costs 12 s) — the write materializes
-      // every column, like Bench's protocol
-      val frame = df
-      frame.write.format("noop").mode("overwrite").save()
-      val wall = (System.nanoTime() - t0) / 1e9
-      // snapshot the skew BEFORE the row-count job: the count is a
-      // second execution (Catalyst prunes it to a benchmark-sized
-      // probe) whose stages must not displace the timed write's
-      // skew reading
-      val sk = skew.worst().map { case (mx, med, r) =>
-        f" max_task=${mx / 1000.0}%.2f s median=${med / 1000.0}%.2f s ratio=$r%.2f"
-      }.getOrElse(" (no >=8-task stage reached 200 ms)")
-      val n = frame.count()
-      println(f"[decontam-probe] $name wall=$wall%.2f s rows=$n$sk")
-    }
-
     for (_ <- 1 to rounds) {
-      run("d21_report_fixed_bench",
-        graft.ext.Decontam.contaminationReport(corpus, "text", "doc_id",
-          bench, "text", "eval_set"))
-      run("d21_report_HASHED",
-        graft.ext.Decontam.contaminationReportHashed(corpus, "text",
-          "doc_id", bench, "text", "eval_set"))
-      run("d22_curve_fixed_bench",
-        graft.ext.Decontam.contaminationCurve(corpus, "text", "doc_id",
-          bench, "text", "eval_set", ns = Seq(4, 8, 13)))
-      run("d22_curve_HASHED",
-        graft.ext.Decontam.contaminationCurveHashed(corpus, "text",
-          "doc_id", bench, "text", "eval_set", ns = Seq(4, 8, 13)))
+      Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "d21_report_fixed_bench" -> (() =>
+          graft.ext.Decontam.contaminationReport(corpus, "text", "doc_id",
+            bench, "text", "eval_set")),
+        "d21_report_HASHED" -> (() =>
+          graft.ext.Decontam.contaminationReportHashed(corpus, "text",
+            "doc_id", bench, "text", "eval_set")),
+        "d22_curve_fixed_bench" -> (() =>
+          graft.ext.Decontam.contaminationCurve(corpus, "text", "doc_id",
+            bench, "text", "eval_set", ns = Seq(4, 8, 13))),
+        "d22_curve_HASHED" -> (() =>
+          graft.ext.Decontam.contaminationCurveHashed(corpus, "text",
+            "doc_id", bench, "text", "eval_set", ns = Seq(4, 8, 13)))
+      ).foreach { case (name, df) =>
+        // noop WRITE, not count(): the report's left join from the
+        // eval-set relation is key-unique, so a count() lets Catalyst
+        // eliminate the whole corpus-scan subtree (measured 0.4 s
+        // "scans" of a corpus whose raw gram explode costs 12 s) — the
+        // write materializes every column, like Bench's protocol. The
+        // skew note is taken before the row count, a second execution
+        // (pruned to a benchmark-sized probe) whose stages must not
+        // displace the timed write's skew reading.
+        val (frame, wall, sk) = Probe.timed {
+          val f = df()
+          f.write.format("noop").mode("overwrite").save()
+          f
+        }
+        val n = frame.count()
+        println(f"[decontam-probe] $name wall=$wall%.2f s rows=$n$sk")
+      }
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-probe data generator (dev tooling, like [[Bench]]/[[Verify]]):
@@ -98,16 +98,7 @@ object GenScale {
       if (args.length > 4) Some(args(4).split(",").map(_.trim).toSet)
       else None
     def wanted(name: String): Boolean = onlyTables.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-genscale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Probe.session("graft-genscale")
 
     def tbl(name: String): DataFrame =
       spark.read.parquet(s"$srcDir/$name.parquet")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the image near-dup hot-bucket cap (dev tooling, the
@@ -30,17 +29,7 @@ object ImageDupProbe {
   def main(args: Array[String]): Unit = {
     val corpusDir = args(0)
     val uncapped = args.length > 1 && args(1) == "1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-imagedup-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val skew = new StageSkewListener
-    spark.sparkContext.addSparkListener(skew)
+    val spark = Probe.session("graft-imagedup-probe")
 
     val mediaPath = s"$corpusDir/media.parquet"
     require(java.nio.file.Files.exists(java.nio.file.Paths.get(mediaPath)),
@@ -63,18 +52,6 @@ object ImageDupProbe {
         "  <-- FLOOD UNDER CAP: the capped run below measures nothing"
        else ""))
 
-    def timed(what: String)(f: => Long): Long = {
-      skew.reset()
-      val t0 = System.nanoTime()
-      val out = f
-      val wall = (System.nanoTime() - t0) / 1e9
-      val sk = skew.worst().map { case (mx, med, r) =>
-        f" max_task=${mx / 1000.0}%.2f s median=${med / 1000.0}%.2f s ratio=$r%.2f"
-      }.getOrElse(" (no >=8-task stage reached 200 ms)")
-      println(f"[imagedup-probe] $what wall=$wall%.2f s pairs=$out$sk")
-      out
-    }
-
     // flood membership by payload identity: a pair is flood-internal
     // iff both sides carry the hot payload's hash
     def floodSplit(pairs: org.apache.spark.sql.DataFrame): (Long, Long) = {
@@ -96,13 +73,14 @@ object ImageDupProbe {
     // the eager Scale.materialize IS the materialization — it must sit
     // INSIDE the timed block or the wall measures a cached count (the
     // probe-design trap this file exists to avoid)
-    var capped: org.apache.spark.sql.DataFrame = null
-    timed("neardup(capped)") {
-      capped = graft.ext.Multimodal
+    val ((capped, cappedPairs), cappedWall, cappedSk) = Probe.timed {
+      val m = graft.ext.Multimodal
         .imageNearDup(media, "media_id", "content", maxDist = 8)
         .transform(graft.ext.Scale.materialize)
-      capped.count()
+      (m, m.count())
     }
+    println(f"[imagedup-probe] neardup(capped) wall=$cappedWall%.2f s " +
+      f"pairs=$cappedPairs$cappedSk")
     val (total, fl) = floodSplit(capped)
     println(s"[imagedup-probe] capped effect: pairs=$total " +
       s"flood_internal=$fl planted_or_chance=${total - fl}" +
@@ -112,13 +90,14 @@ object ImageDupProbe {
         "  <-- NO SURVIVING PAIRS: planted structure missing?" else ""))
 
     if (uncapped) {
-      var free: org.apache.spark.sql.DataFrame = null
-      timed("neardup(uncapped)") {
-        free = graft.ext.Multimodal.imageNearDup(media, "media_id",
+      val ((free, freePairs), freeWall, freeSk) = Probe.timed {
+        val m = graft.ext.Multimodal.imageNearDup(media, "media_id",
           "content", maxDist = 8, maxBucketSize = Int.MaxValue)
           .transform(graft.ext.Scale.materialize)
-        free.count()
+        (m, m.count())
       }
+      println(f"[imagedup-probe] neardup(uncapped) wall=$freeWall%.2f s " +
+        f"pairs=$freePairs$freeSk")
       val (ft, ffl) = floodSplit(free)
       println(s"[imagedup-probe] uncapped effect: pairs=$ft " +
         s"flood_internal=$ffl (the quadratic term the cap removes)")

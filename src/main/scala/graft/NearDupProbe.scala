@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale probe for the persisted near-dup index (dev tooling, like
@@ -39,17 +38,7 @@ object NearDupProbe {
     val corpusDir = args(0)
     val rounds = if (args.length > 1) args(1).toInt else 2
     val smallAppends = if (args.length > 2) args(2).toInt else 0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-neardup-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val skew = new StageSkewListener
-    spark.sparkContext.addSparkListener(skew)
+    val spark = Probe.session("graft-neardup-probe")
 
     val corpus = Tables.documents(spark, corpusDir)
       .select(col("doc_id"), col("text"))
@@ -62,13 +51,9 @@ object NearDupProbe {
     for (round <- 1 to rounds) {
       val root = java.nio.file.Files
         .createTempDirectory("graft_ndprobe_").resolve("idx").toString
-      skew.reset()
-      var t0 = System.nanoTime()
-      graft.ext.Dedup.saveMinHashIndex(root, corpus, "text", "doc_id")
-      val buildWall = (System.nanoTime() - t0) / 1e9
-      val buildSk = skew.worst().map { case (mx, med, r) =>
-        f" max_task=${mx / 1000.0}%.2f s median=${med / 1000.0}%.2f s ratio=$r%.2f"
-      }.getOrElse(" (no >=8-task stage reached 200 ms)")
+      val (_, buildWall, buildSk) = Probe.timed {
+        graft.ext.Dedup.saveMinHashIndex(root, corpus, "text", "doc_id")
+      }
       println(f"[neardup-probe] build wall=$buildWall%.2f s$buildSk")
 
       val conf = graft.ext.Dedup.openMinHashIndex(spark, root)
@@ -78,25 +63,18 @@ object NearDupProbe {
       // increment's keys) — measure that scan's cost vs index size
       val increment = corpus.where(col("doc_id") % 100 === 50)
         .select((col("doc_id") + 2000000000L).as("doc_id"), col("text"))
-      skew.reset()
-      t0 = System.nanoTime()
-      graft.ext.Dedup.appendMinHashIndex(root, increment, "text",
-        "doc_id", conf)
-      val appendWall = (System.nanoTime() - t0) / 1e9
-      val appendSk = skew.worst().map { case (mx, med, r) =>
-        f" max_task=${mx / 1000.0}%.2f s median=${med / 1000.0}%.2f s ratio=$r%.2f"
-      }.getOrElse(" (no >=8-task stage reached 200 ms)")
+      val (_, appendWall, appendSk) = Probe.timed {
+        graft.ext.Dedup.appendMinHashIndex(root, increment, "text",
+          "doc_id", conf)
+      }
       println(f"[neardup-probe] append(1%%, re-capped) wall=$appendWall%.2f s$appendSk")
 
-      skew.reset()
-      t0 = System.nanoTime()
-      val flags = graft.ext.Dedup.flagAgainstIndex(spark, root, conf,
-        arrivals, "text", "doc_id")
-      flags.write.format("noop").mode("overwrite").save()
-      val serveWall = (System.nanoTime() - t0) / 1e9
-      val serveSk = skew.worst().map { case (mx, med, r) =>
-        f" max_task=${mx / 1000.0}%.2f s median=${med / 1000.0}%.2f s ratio=$r%.2f"
-      }.getOrElse(" (no >=8-task stage reached 200 ms)")
+      val (flags, serveWall, serveSk) = Probe.timed {
+        val f = graft.ext.Dedup.flagAgainstIndex(spark, root, conf,
+          arrivals, "text", "doc_id")
+        f.write.format("noop").mode("overwrite").save()
+        f
+      }
       val n = flags.count()
       println(f"[neardup-probe] serve wall=$serveWall%.2f s flags=$n$serveSk")
 
@@ -106,15 +84,12 @@ object NearDupProbe {
       graft.ext.Dedup.deleteFromMinHashIndex(root,
         corpus.where(col("doc_id") % 200 === 0).select(col("doc_id")),
         "doc_id")
-      skew.reset()
-      t0 = System.nanoTime()
-      val flagsDel = graft.ext.Dedup.flagAgainstIndex(spark, root, conf,
-        arrivals, "text", "doc_id")
-      flagsDel.write.format("noop").mode("overwrite").save()
-      val delWall = (System.nanoTime() - t0) / 1e9
-      val delSk = skew.worst().map { case (mx, med, r) =>
-        f" max_task=${mx / 1000.0}%.2f s median=${med / 1000.0}%.2f s ratio=$r%.2f"
-      }.getOrElse(" (no >=8-task stage reached 200 ms)")
+      val (flagsDel, delWall, delSk) = Probe.timed {
+        val f = graft.ext.Dedup.flagAgainstIndex(spark, root, conf,
+          arrivals, "text", "doc_id")
+        f.write.format("noop").mode("overwrite").save()
+        f
+      }
       val nd = flagsDel.count()
       println(f"[neardup-probe] serve+takedown(0.5%%) wall=$delWall%.2f s " +
         f"flags=$nd$delSk")
@@ -131,13 +106,13 @@ object NearDupProbe {
           // an append WITHOUT the re-cap scan costs about this)
           val throwaway = java.nio.file.Files
             .createTempDirectory("graft_ndprobe_inc_").resolve("t").toString
-          t0 = System.nanoTime()
-          graft.ext.Dedup.saveMinHashIndex(throwaway, inc, "text", "doc_id")
-          val baseWall = (System.nanoTime() - t0) / 1e9
-          t0 = System.nanoTime()
-          graft.ext.Dedup.appendMinHashIndex(root, inc, "text", "doc_id",
-            conf)
-          val incWall = (System.nanoTime() - t0) / 1e9
+          val (_, baseWall, _) = Probe.timed {
+            graft.ext.Dedup.saveMinHashIndex(throwaway, inc, "text", "doc_id")
+          }
+          val (_, incWall, _) = Probe.timed {
+            graft.ext.Dedup.appendMinHashIndex(root, inc, "text", "doc_id",
+              conf)
+          }
           println(f"[neardup-probe] small-append #$i wall=$incWall%.2f s " +
             f"increment-only-build=$baseWall%.2f s " +
             f"recap-term≈${incWall - baseWall}%.2f s")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev plan dumper (tooling, like [[Probe]]): run named gate queries
   * against a data dir and write each one's `.explain("formatted")`
   * physical plan to `<outDir>/<gate>_<suffix>.txt` — the before/after
@@ -20,16 +18,7 @@ object Plans {
     val suffix = args(2)
     val names = args.drop(3)
     java.nio.file.Files.createDirectories(outDir)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plans")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Probe.session("graft-plans")
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
       val plan = fn(spark, dir).queryExecution.explainString(

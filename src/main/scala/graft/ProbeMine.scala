@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe for [[graft.ext.AnnIndex.mineHardNegatives]] at
@@ -18,34 +17,26 @@ object ProbeMine {
     val k = if (args.length > 1) args(1).toInt else 4
     val nprobeArg = if (args.length > 2) args(2).toInt else 0
     val rerank = if (args.length > 3) args(3).toInt else 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-probe-mine")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Probe.session("graft-probe-mine")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val n = emb.count()
     val nlist = math.max(1, math.floor(math.sqrt(n.toDouble)).toInt)
     val nprobe = if (nprobeArg > 0) nprobeArg else math.max(1, nlist / 16)
     val root = java.nio.file.Files.createTempDirectory("graft_minprobe_")
       .resolve("idx").toString
-    val t0 = System.nanoTime()
-    graft.ext.AnnIndex.buildIvfPq(
-      emb.select(col("vec_id").as("cid"), col("embedding").as("cvec")),
-      dim = 64, nlist = nlist, root = root, m = 8, codes = 16)
-    val tBuild = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    graft.ext.AnnIndex.mineHardNegatives(spark, root,
-        emb.select(col("vec_id").as("qid"), col("embedding").as("qvec"),
-          col("label").as("qlab")),
-        emb.select(col("vec_id").as("cid"), col("label").as("clab")),
-        k = k, nprobe = nprobe, rerank = rerank)
-      .write.format("noop").mode("overwrite").save()
-    val tMine = (System.nanoTime() - t1) / 1e9
+    val (_, tBuild, _) = Probe.timed {
+      graft.ext.AnnIndex.buildIvfPq(
+        emb.select(col("vec_id").as("cid"), col("embedding").as("cvec")),
+        dim = 64, nlist = nlist, root = root, m = 8, codes = 16)
+    }
+    val (_, tMine, _) = Probe.timed {
+      graft.ext.AnnIndex.mineHardNegatives(spark, root,
+          emb.select(col("vec_id").as("qid"), col("embedding").as("qvec"),
+            col("label").as("qlab")),
+          emb.select(col("vec_id").as("cid"), col("label").as("clab")),
+          k = k, nprobe = nprobe, rerank = rerank)
+        .write.format("noop").mode("overwrite").save()
+    }
     println(f"[probe-mine] n=$n nlist=$nlist nprobe=$nprobe rerank=$rerank " +
       f"k=$k build=$tBuild%.2f s mine=$tMine%.2f s")
     spark.stop()

@@ -1,137 +1,28 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import scala.collection.concurrent.TrieMap
-
 /** Dev stage profiler (tooling, like [[Probe]]/[[Plans]]): run a named
-  * gate once after an optional warm-up pass and print every stage's
-  * wall time, summed task time, input/shuffle bytes and row counts,
-  * sorted by task time — the "which operator is the money going to"
-  * view the Spark UI would give, as text (the UI is disabled in the
-  * sandbox mains and the judge cannot run one anyway).
+  * gate once after an optional warm-up pass and print its [[Trace]]
+  * report — every job with its gap and wall, and the most expensive
+  * stages with task time, input/shuffle bytes and row counts.
   *
   * Usage: runMain graft.StageProfile <sfDir> <gate> [warmups=1]
   */
 object StageProfile {
 
-  private final class L extends org.apache.spark.scheduler.SparkListener {
-    case class S(name: String, var wallMs: Long = 0, var taskMs: Long = 0,
-      var tasks: Int = 0, var inBytes: Long = 0, var inRows: Long = 0,
-      var srBytes: Long = 0, var swBytes: Long = 0, var outRows: Long = 0,
-      var spill: Long = 0, var maxTaskMs: Long = 0, var deserMs: Long = 0,
-      var gcMs: Long = 0, var runMs: Long = 0)
-    val stages = TrieMap.empty[Int, S]
-    val submitted = TrieMap.empty[Int, Long]
-    val jobs = TrieMap.empty[Int, (Long, Long, String)] // id -> (t0, t1, site)
-
-    override def onJobStart(
-        e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-      val site = Option(e.properties).flatMap(p =>
-        Option(p.getProperty("callSite.short"))
-          .orElse(Option(p.getProperty("spark.job.description")))
-          .orElse(Option(p.getProperty("spark.sql.execution.root.id"))
-            .map("sqlRoot " + _)))
-        .getOrElse("?") + " | stages=" + e.stageInfos.map(si =>
-          si.name.linesIterator.next().take(40)).mkString(";").take(120)
-      jobs(e.jobId) = (System.nanoTime(), 0L, site)
-    }
-    override def onJobEnd(
-        e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-      jobs.get(e.jobId).foreach { case (t0, _, s) =>
-        jobs(e.jobId) = (t0, System.nanoTime(), s) }
-
-    override def onStageSubmitted(
-        e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = {
-      submitted(e.stageInfo.stageId) = System.nanoTime()
-      stages.getOrElseUpdate(e.stageInfo.stageId,
-        S(e.stageInfo.name.linesIterator.next()))
-    }
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val s = stages.getOrElseUpdate(e.stageInfo.stageId,
-        S(e.stageInfo.name.linesIterator.next()))
-      submitted.get(e.stageInfo.stageId).foreach(t0 =>
-        s.wallMs += (System.nanoTime() - t0) / 1000000L)
-    }
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      if (e.taskInfo != null && e.taskInfo.successful && e.taskMetrics != null) {
-        val s = stages.getOrElseUpdate(e.stageId, S("?"))
-        s.synchronized {
-          s.taskMs += e.taskInfo.duration
-          s.maxTaskMs = math.max(s.maxTaskMs, e.taskInfo.duration)
-          s.deserMs += e.taskMetrics.executorDeserializeTime
-          s.gcMs += e.taskMetrics.jvmGCTime
-          s.runMs += e.taskMetrics.executorRunTime
-          s.tasks += 1
-          s.inBytes += e.taskMetrics.inputMetrics.bytesRead
-          s.inRows += e.taskMetrics.inputMetrics.recordsRead
-          s.srBytes += e.taskMetrics.shuffleReadMetrics.totalBytesRead
-          s.swBytes += e.taskMetrics.shuffleWriteMetrics.bytesWritten
-          s.outRows += e.taskMetrics.shuffleWriteMetrics.recordsWritten
-          s.spill += e.taskMetrics.diskBytesSpilled
-        }
-      }
-    def report(): Unit = {
-      def mb(b: Long): String = f"${b / 1048576.0}%.1f"
-      val tot = stages.values.map(_.taskMs).sum
-      val done = jobs.values.filter(_._2 > 0)
-      val jobWall = done.map(j => (j._2 - j._1) / 1e9).sum
-      println(f"[profile] total task time ${tot / 1000.0}%.2f s across " +
-        s"${stages.size} stages, ${jobs.size} jobs " +
-        f"(summed job wall $jobWall%.2f s)")
-      // job timeline with inter-job gaps (driver planning / eager setup)
-      val ordered = jobs.toSeq.sortBy(_._1)
-      ordered.headOption.foreach { case (_, (f0, _, _)) =>
-        var prevEnd = f0
-        ordered.foreach { case (id, (t0, t1, site)) =>
-          val gap = (t0 - prevEnd) / 1e9
-          val w = if (t1 > 0) (t1 - t0) / 1e9 else -1.0
-          println(f"[job $id%3d] gap=$gap%6.3fs wall=$w%6.3fs  $site%s")
-          if (t1 > 0) prevEnd = math.max(prevEnd, t1)
-        }
-      }
-      stages.toSeq.sortBy(-_._2.taskMs).take(30).foreach { case (id, s) =>
-        println(f"[stage $id%4d] task=${s.taskMs / 1000.0}%7.2fs " +
-          f"(deser=${s.deserMs / 1000.0}%.2f gc=${s.gcMs / 1000.0}%.2f " +
-          f"run=${s.runMs / 1000.0}%.2f) " +
-          f"wall=${s.wallMs / 1000.0}%6.2fs n=${s.tasks}%4d " +
-          f"maxTask=${s.maxTaskMs / 1000.0}%5.2fs in=${mb(s.inBytes)}%8sMB/" +
-          f"${s.inRows}%d rows sr=${mb(s.srBytes)}%8sMB " +
-          f"sw=${mb(s.swBytes)}%8sMB/${s.outRows}%d rows " +
-          f"spill=${mb(s.spill)}%s MB  ${s.name.take(90)}")
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val name = args(1)
     val warmups = if (args.length > 2) args(2).toInt else 1
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stageprofile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Probe.session("graft-stageprofile")
     val fn = SparkEntry.queries(name)
     (1 to warmups).foreach { _ =>
       fn(spark, dir).write.format("noop").mode("overwrite").save()
     }
-    val l = new L
-    spark.sparkContext.addSparkListener(l)
-    val t0 = System.nanoTime()
-    fn(spark, dir).write.format("noop").mode("overwrite").save()
-    val wall = (System.nanoTime() - t0) / 1e9
-    // give the async listener bus a moment to drain before reading
-    Thread.sleep(1500)
+    val (_, wall, _) = Probe.timed {
+      fn(spark, dir).write.format("noop").mode("overwrite").save()
+    }
     println(f"[profile] $name wall=$wall%.2f s")
-    l.report()
+    println(Probe.trace.report())
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Files-skipped evidence for z-order clustering (dev tooling, the
@@ -34,15 +33,7 @@ object ZOrderProbe {
     val bandPct = if (args.length > 2) args(2).toInt else 2
     val dimA = if (args.length > 3) args(3) else "l_partkey"
     val dimB = if (args.length > 4) args(4) else "l_suppkey"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-zorder-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Probe.session("graft-zorder-probe")
 
     val li = spark.read.parquet(s"$src/lineitem.parquet")
       .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
@@ -55,17 +46,12 @@ object ZOrderProbe {
     val lexDir = base.resolve("lex").toString
     val zDir = base.resolve("zorder").toString
 
-    def timedS[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val out = f
-      (out, (System.nanoTime() - t0) / 1e9)
-    }
-    val (_, wLex) = timedS {
+    val (_, wLex, _) = Probe.timed {
       li.repartitionByRange(nFiles, col(dimA), col(dimB))
         .sortWithinPartitions(dimA, dimB)
         .write.parquet(lexDir)
     }
-    val (_, wZ) = timedS {
+    val (_, wZ, _) = Probe.timed {
       graft.ext.Scale.zOrderBy(li, Seq(dimA, dimB),
           bits = 16, numPartitions = Some(nFiles))
         .drop("z_value").write.parquet(zDir)
@@ -92,7 +78,7 @@ object ZOrderProbe {
       val hi = lo + math.max(1L, maxV * bandPct / 100) - 1
       for ((name, dir) <- Seq("lex" -> lexDir, "zorder" -> zDir)) {
         val (total, keep) = kept(dir, column, lo, hi)
-        val (rows, wall) = timedS {
+        val (rows, wall, _) = Probe.timed {
           graft.ext.Scale.prunedRead(spark, dir, column, lo, hi).count()
         }
         println(f"[zorder-probe] $name%-6s $column band [$lo,$hi]: " +

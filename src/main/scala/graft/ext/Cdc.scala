@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 
 /** Change-data-capture application: MERGE (upsert + delete) semantics
   * over plain DataFrames — the `MERGE INTO` a warehouse user of the
@@ -220,13 +221,14 @@ object Cdc {
       val tmp = table + "__merge_stage"
       spark.sql(s"DROP TABLE IF EXISTS $tmp")
       merged.write.mode("overwrite").format("parquet").saveAsTable(tmp)
-      val prevMode =
-        spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       try {
+        // The dynamic mode is set on a clone of the caller's session, so
+        // no other thread on the caller's session ever writes with it.
         // insertInto matches by POSITION with the partition column last.
+        val writer = SessionBridge.cloneSession(spark)
+        writer.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         val cols = base.columns.filterNot(_ == partCol) :+ partCol
-        spark.table(tmp).select(cols.map(col): _*)
+        writer.table(tmp).select(cols.map(col): _*)
           .write.mode("overwrite").insertInto(table)
         // Dynamic overwrite only replaces partitions PRESENT in the
         // written slice: an affected partition the merge left EMPTY
@@ -239,15 +241,7 @@ object Cdc {
           spark.sql(
             s"ALTER TABLE $table DROP IF EXISTS PARTITION ($partCol = '$lit')")
         }
-      } finally {
-        prevMode match {
-          case Some(m) =>
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-          case None =>
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-        spark.sql(s"DROP TABLE IF EXISTS $tmp")
-      }
+      } finally spark.sql(s"DROP TABLE IF EXISTS $tmp")
       spark.catalog.refreshTable(table)
     }
   }

@@ -647,7 +647,14 @@ class ScaleSpec extends AnyFunSuite {
       (4L, 5L), (5L, 1L)).toDF("src", "dst")
     val ranked = (0L until 200L).map(i => (i, if (i % 3 == 0) "a" else "b"))
       .toDF("id", "lang")
+    val tbl = "shared_state_merge_tbl"
+    Seq(tbl, tbl + "__merge_stage").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS $t"))
+    Seq((1L, "x", "A"), (2L, "y", "B")).toDF("k", "v", "p")
+      .write.partitionBy("p").format("parquet").saveAsTable(tbl)
+    val overwrite = "spark.sql.sources.partitionOverwriteMode"
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val mode = spark.conf.get(overwrite)
     val dir = spark.sparkContext.getCheckpointDir
     val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     @volatile var done = false
@@ -655,6 +662,8 @@ class ScaleSpec extends AnyFunSuite {
       while (!done) {
         val a = spark.conf.get("spark.sql.adaptive.enabled")
         if (a != aqe) seen.add(s"spark.sql.adaptive.enabled=$a")
+        val m = spark.conf.get(overwrite)
+        if (m != mode) seen.add(s"$overwrite=$m")
         val d = spark.sparkContext.getCheckpointDir
         if (d != dir) seen.add(s"checkpoint dir=$d")
         Thread.sleep(1)
@@ -666,10 +675,16 @@ class ScaleSpec extends AnyFunSuite {
       Graphs.pageRank(edges, "src", "dst", iters = 3).collect()
       Packing.groupRank(ranked, Seq("lang"), Seq(col("id")),
         numPartitions = 4).collect()
+      Cdc.mergeUpsertPruned(tbl, Seq((1L, "x2", "A")).toDF("k", "v", "p"),
+        keys = Seq("k"), partCol = "p")
     } finally {
       done = true
       poller.join()
     }
     assert(seen.isEmpty, s"another thread saw shared state change: $seen")
+    // the merge still overwrote dynamically: partition B survived
+    assert(spark.table(tbl).orderBy("k").as[(Long, String, String)]
+      .collect().toSeq === Seq((1L, "x2", "A"), (2L, "y", "B")))
+    spark.sql(s"DROP TABLE $tbl")
   }
 }

@@ -4,7 +4,8 @@ import graft.io._
 import graft.schema.TableMeta
 import graft.sink.{AuditLog, TableSink, TableRef}
 import graft.validate.ValidateAndSplit
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.storage.StorageLevel
 import java.nio.file.{Files, Path}
 import scala.collection.mutable.ListBuffer
@@ -58,6 +59,12 @@ final case class IngestReport(
   * list → regex match → (latest?) → spool → per-file: unzip? → parse →
   * copy-mode conform | validate+split → append main/_error tables →
   * (delete?) → audit log at each step. Never throws.
+  *
+  * A file costs only its read and write jobs: row counts are observed on
+  * the appends themselves, and the audit rows are buffered and written in
+  * one append when each leaf file ends (processed, skipped or failed) and
+  * once when the run ends. A run that dies keeps the audit rows of every
+  * file it finished.
   */
 object Ingest {
 
@@ -68,9 +75,23 @@ object Ingest {
     var validRows = 0L
     var invalidRows = 0L
 
-    def log(action: String, info: String): Unit =
-      try AuditLog.logTask(spark, conf.table, conf.taskOwner, action, info)
-      catch { case NonFatal(e) => errors += s"audit log failed: ${e.getMessage}" }
+    val audit = new AuditLog.Buffer(spark, conf.table, conf.taskOwner)
+    def log(action: String, info: String): Unit = audit.add(action, info)
+    def flushAudit(): Unit = {
+      val held = audit.size
+      try audit.flush()
+      catch { case NonFatal(e) =>
+        errors ++= Seq.fill(held)(s"audit log failed: ${e.getMessage}")
+      }
+    }
+
+    /** Appends `df` through `write` and returns the rows it wrote,
+      * counted in the same pass. */
+    def appendCounted(df: DataFrame)(write: DataFrame => Unit): Long = {
+      val obs = Observation()
+      write(df.observe(obs, count(lit(1)).as("n")))
+      obs.get("n").asInstanceOf[Long]
+    }
 
     // Per-run spool dir, removed in finally (the reference rmtree's its
     // /tmp/box/<table> dir per run, box_ingest.py:51-53; leaking it would
@@ -135,22 +156,24 @@ object Ingest {
               // O10 happens inside ValidateAndSplit; for copy mode conform
               // handles names. Cache: both split sides scan this frame.
               val raw = raw0.persist(StorageLevel.MEMORY_AND_DISK)
-              def prov(df: org.apache.spark.sql.DataFrame) =
-                conf.sourceFileCol.fold(df)(c =>
-                  df.withColumn(c, org.apache.spark.sql.functions.lit(fname)))
+              def prov(df: DataFrame) =
+                conf.sourceFileCol.fold(df)(c => df.withColumn(c, lit(fname)))
               try {
                 if (conf.justCopy) {
                   // O22: conform to target schema minus process_dt.
-                  TableSink.appendConformed(prov(raw), conf.table)
-                  validRows += raw.count()
+                  validRows += appendCounted(prov(raw))(
+                    TableSink.appendConformed(_, conf.table))
                 } else {
                   val meta = conf.metadata.getOrElse(throw new IllegalArgumentException(
                     "metadata required when justCopy=false"))
                   val split = ValidateAndSplit(raw, meta)
-                  TableSink.append(prov(split.valid), conf.table)     // O21
-                  TableSink.append(prov(split.invalid), conf.table.errorSibling)
-                  validRows += split.valid.count()
-                  invalidRows += split.invalid.count()
+                  // Each side's count lands as soon as its own append
+                  // does, so a failed _error append cannot hide rows the
+                  // main table already holds.
+                  validRows += appendCounted(prov(split.valid))(
+                    TableSink.append(_, conf.table))     // O21
+                  invalidRows += appendCounted(prov(split.invalid))(
+                    TableSink.append(_, conf.table.errorSibling))
                 }
               } finally raw.unpersist()
               processed += fname
@@ -159,7 +182,7 @@ object Ingest {
         } catch { case NonFatal(e) =>
           errors += s"process $fname: ${e.getMessage}"
           log("File processing failed", s"$fname: ${e.getMessage}")
-        }
+        } finally flushAudit()
       }
 
       spooled.foreach(processFile)
@@ -176,6 +199,7 @@ object Ingest {
       errors += s"ingest failed: ${e.getMessage}"
       log("Ingest failed", e.getMessage) // E1: failure is log-only
     } finally {
+      flushAudit()
       if (tmp != null) try {
         val walk = Files.walk(tmp)
         try walk.sorted(java.util.Comparator.reverseOrder[Path]())

@@ -507,7 +507,7 @@ object Curation {
     *  4. token-balanced shard assignment
     *     ([[Packing.shardByTokens]]), host riding as a carry column.
     *
-    * Plan: stages 1-2 shuffle on url/host keys, localCheckpoint cuts
+    * Plan: stages 1-2 shuffle on url/host keys, Scale.materialize cuts
     * the front half exactly as [[curate]] does (Catalyst does not reuse
     * a common scan across the later subtrees), sharding is the standard
     * two-phase prefix sum. Every stage is SQL-replayable, so the whole

@@ -215,7 +215,7 @@ object Dedup {
     * isolated shape) and hands the groupBy a LogicalRDD already
     * hash-partitioned on the bucket key, so no coalescable exchange
     * exists between the postings and the expansion. Cost: one
-    * postings-sized localCheckpoint — callers gate it on MEASURED
+    * postings-sized Scale.materialize — callers gate it on MEASURED
     * input smallness (the AQE-collapse regime), so a corpus-scale run
     * skips the extra materialization it doesn't need. */
   private[graft] def bucketPairs(withBucket: DataFrame, keyCols: Seq[String],
@@ -744,7 +744,7 @@ object Dedup {
     * [[dropFromPairsTransitive]]).
     *
     * Each round is one join + one aggregate (two shuffles on id-shaped
-    * keys); `localCheckpoint` truncates the plan each round so iteration
+    * keys); `Scale.materialize` truncates the plan each round so iteration
     * N doesn't replan rounds 1..N-1 — the classic iterative-DataFrame
     * trap. Output: (id, component) for every id appearing in `pairs`,
     * component = min id reachable. */
@@ -800,7 +800,7 @@ object Dedup {
     *
     * Plan shape per round: each step is ONE count-window over a node key
     * (same hash partitioning as the shuffle it rides) + a narrow
-    * projection — no join-back; `localCheckpoint` truncates lineage per
+    * projection — no join-back; `Scale.materialize` truncates lineage per
     * round. The convergence probe (set equality against the previous
     * round) is two id-keyed jobs on the star-forest-sized edge set.
     *

@@ -176,7 +176,7 @@ object Graphs {
     * the (one row per node) rank frame on the source key — both sides
     * hash-partitioned on that key, the edge side once up front and
     * reused every round — plus one partial-aggregated groupBy on dst.
-    * State per node is a single long; `localCheckpoint` per round
+    * State per node is a single long; `Scale.materialize` per round
     * truncates the growing lineage exactly as
     * [[Dedup.connectedComponents]] does. Total work: O(iters · m).
     *
@@ -273,7 +273,7 @@ object Graphs {
     * Plan shape per round: one degree aggregation (two narrow unions of
     * the edge frame, one shuffle on node) and two anti-joins of the
     * edge frame against the (usually tiny, broadcast) doomed-node set;
-    * `localCheckpoint` truncates lineage per round, same as every
+    * `Scale.materialize` truncates lineage per round, same as every
     * iterative fixed-point here. Peeling removes at least one node per
     * round on a non-converged graph, but real graphs shed whole
     * shells per round — rounds in practice are O(core number), with
@@ -296,7 +296,7 @@ object Graphs {
     * Plan per round: one join of the (undirected, deduped) edge
     * relation against the label frame on the neighbor key, a counted
     * groupBy, and an exact argmax via max(struct(count, -label)) — all
-    * shuffles keyed on node ids, `localCheckpoint` cutting the
+    * shuffles keyed on node ids, `Scale.materialize` cutting the
     * iterative lineage (the same discipline as [[pageRank]]/[[kCore]]).
     * Nothing is ever all-pairs; cost per round is O(edges) shuffled.
     * Returns (node, lbl) for every non-isolated node.

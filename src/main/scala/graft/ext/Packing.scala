@@ -426,7 +426,7 @@ object Packing {
     // scaffold defeated itself here — unpersist ran when this function
     // RETURNED, before the caller ever executed the result, so the
     // whole input subtree re-evaluated on the final pass (measured 2x
-    // on p7, whose input is the full KN scoring chain). localCheckpoint
+    // on p7, whose input is the full KN scoring chain). Scale.materialize
     // cuts lineage, so however expensive the input, it runs exactly
     // once; the checkpointed rows are narrow (id, carry, n_tokens).
     // Storage follows Scale.materialize: local blocks (pinned until

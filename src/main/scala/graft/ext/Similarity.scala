@@ -299,7 +299,7 @@ object Similarity {
     * Scale shape per round: one narrow corpus pass against a broadcast
     * centroid table, one partial-aggregated shuffle of
     * O(nlist × D × partitions) mean cells, one broadcast-sized join.
-    * The corpus is never shuffled. `localCheckpoint` truncates the
+    * The corpus is never shuffled. `Scale.materialize` truncates the
     * per-round lineage (iterative-DataFrame trap).
     *
     * Why bother at 100 TB: hash-sampled centroids are valid but

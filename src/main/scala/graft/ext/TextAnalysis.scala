@@ -1742,7 +1742,7 @@ object TextAnalysis {
     * incrementally via [[nbMerge]] + append) and classification calls
     * stop re-aggregating the reference corpus AND stop re-measuring
     * the model per call. The placement measurement ([[nbClassify]]'s
-    * auto mode runs it as an eager localCheckpoint per call — the t29
+    * auto mode runs it as an eager Scale.materialize per call — the t29
     * regression) is taken ONCE here and saved in the meta sidecar;
     * [[nbClassifyFromModel]] reads three model-sized parquet frames
     * and pins the placement from the saved estimate. */
@@ -1867,7 +1867,7 @@ object TextAnalysis {
     require(scale >= 1L, s"scale=$scale")
     // Auto mode MEASURES the model, so it would otherwise execute the
     // model-building aggregation twice (once for the size probe, once
-    // in the join); a localCheckpoint materializes it exactly once —
+    // in the join); Scale.materialize runs it exactly once —
     // a model is reference-set-sized, so the checkpoint is small.
     val tokenCountsEff =
       if (broadcastModel.isEmpty) tokenCounts.transform(Scale.materialize)

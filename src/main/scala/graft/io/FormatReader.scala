@@ -39,19 +39,14 @@ object FormatReader {
         // Spark only under multiLine=true, which disables input
         // splitting (whole file → one task). So pay for parity only
         // when needed: a quoted newline exists iff some physical line
-        // carries an ODD number of double quotes — a distributed
-        // one-column scan, cheap next to the read itself, and false
-        // positives (a stray quote in a malformed file) merely cost
-        // splitting, never correctness.
-        val oddQuoteLine = spark.read.text(file.toString)
-          .where((length(col("value")) -
-            length(regexp_replace(col("value"), "\"", ""))) % 2 === 1)
-          .limit(1).count() > 0
+        // carries an ODD number of double quotes. False positives (a
+        // stray quote in a malformed file) merely cost splitting, never
+        // correctness.
         Parsed(spark.read
           .option("header", true)
           .option("inferSchema", true)
           .option("encoding", encoding.getOrElse("UTF-8"))
-          .option("multiLine", oddQuoteLine)
+          .option("multiLine", hasOddQuoteLine(file))
           .csv(file.toString))
       case "json" =>
         // The reference's pd.read_json (box_ingest.py:150-151) accepts
@@ -125,6 +120,32 @@ object FormatReader {
     val ArrayDoc, Lines, Columns = Value
   }
   private type JsonShape = JsonShape.Value
+
+  /** True when some physical line of `file` holds an odd number of `"`
+    * bytes. One streaming byte pass on the driver (the file is already
+    * local), stopping at the first such line. A line ends at `\n` or `\r`:
+    * counting a `\r\n` pair as two ends adds only an empty line, which has
+    * no quotes. Byte 0x22 is `"` in UTF-8 and in every ASCII-compatible
+    * charset, so the decision needs no decoding. */
+  private[io] def hasOddQuoteLine(file: Path): Boolean = {
+    val in = java.nio.file.Files.newInputStream(file)
+    try {
+      val buf = new Array[Byte](1 << 16)
+      var odd = false
+      var n = in.read(buf)
+      while (n != -1) {
+        var i = 0
+        while (i < n) {
+          val b = buf(i)
+          if (b == '"') odd = !odd
+          else if ((b == '\n' || b == '\r') && odd) return true
+          i += 1
+        }
+        n = in.read(buf)
+      }
+      odd
+    } finally in.close()
+  }
 
   /** Byte-level shape sniff. '[' first => whole-document array. '{' first:
     * scan the first top-level value (tracking string/escape state and

@@ -1,6 +1,6 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -40,7 +40,11 @@ object TableSink {
     * which would create one directory per write. */
   val DateCol = "process_date"
 
-  def processDt = from_utc_timestamp(current_timestamp(), "Asia/Shanghai")
+  def processDt = processDtOf(current_timestamp())
+
+  /** The `process_dt` of the instant `utc`. */
+  private[sink] def processDtOf(utc: Column): Column =
+    from_utc_timestamp(utc, "Asia/Shanghai").as(ProcessDtCol)
 
   /** Fixed error-table schema (box_ingest.py:116-119, :126). */
   val ErrorSchema: StructType = StructType(Seq(
@@ -54,14 +58,18 @@ object TableSink {
   /** O21: append with ingestion timestamp, partitioned by its date.
     * A table we create is partitioned by [[DateCol]]; appends to a
     * pre-existing table conform to ITS layout (the copy-mode contract
-    * lets callers create unpartitioned targets up front — O22). */
-  def append(df: DataFrame, ref: TableRef): Unit = {
-    val spark = df.sparkSession
-    ensureDatabase(spark, ref)
-    val stamped = df.withColumn(ProcessDtCol, processDt)
-    val partitioned =
-      !spark.catalog.tableExists(ref.qualified) ||
-        spark.table(ref.qualified).columns.contains(DateCol)
+    * lets callers create unpartitioned targets up front — O22). The
+    * database is created only with the table: an existing table implies
+    * its database. */
+  def append(df: DataFrame, ref: TableRef): Unit =
+    appendStamped(df.withColumn(ProcessDtCol, processDt), ref)
+
+  /** [[append]] of a frame that already carries its `process_dt`. */
+  private[sink] def appendStamped(stamped: DataFrame, ref: TableRef): Unit = {
+    val spark = stamped.sparkSession
+    val exists = spark.catalog.tableExists(ref.qualified)
+    if (!exists) ensureDatabase(spark, ref)
+    val partitioned = !exists || spark.table(ref.qualified).columns.contains(DateCol)
     if (partitioned)
       stamped.withColumn(DateCol, to_date(col(ProcessDtCol)))
         .write.mode("append").format("parquet")
@@ -79,7 +87,6 @@ object TableSink {
     * Metadata-only on the table side: no data file is ever rewritten. */
   def appendEvolved(df: DataFrame, ref: TableRef): Unit = {
     val spark = df.sparkSession
-    ensureDatabase(spark, ref)
     if (!spark.catalog.tableExists(ref.qualified)) { append(df, ref); return }
     val existing = spark.table(ref.qualified).schema
       .map(_.name.toLowerCase).toSet

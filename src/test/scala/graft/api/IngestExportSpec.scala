@@ -7,6 +7,7 @@ import graft.sink.TableRef
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
+import scala.jdk.CollectionConverters._
 
 class IngestExportSpec extends AnyFunSuite {
   implicit lazy val spark: org.apache.spark.sql.SparkSession = TestSpark.spark
@@ -95,6 +96,98 @@ class IngestExportSpec extends AnyFunSuite {
     assert((report.validRows, report.invalidRows) === ((1L, 1L)))
     assert(completionRow(ref) === (("Ingest completed with errors",
       report.processedFiles.size.toLong, report.validRows, report.invalidRows)))
+  }
+
+  test("ingest report counts follow the writes: a failed _error append " +
+      "keeps the rows the main append landed") {
+    val dir = Files.createTempDirectory("ing_errside_")
+    Files.writeString(dir.resolve("data_1.csv"),
+      "id,amount,note\n1,2.5,ok\n,3.0,missing-id\n2,1.0,ok\n")
+    val ref = freshRef("errside")
+    // An _error table whose schema no split frame fits: its append fails
+    // after the main append has landed.
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS `${ref.database}`")
+    spark.sql(s"CREATE TABLE ${ref.errorSibling.qualified} (x INT) USING parquet")
+    val report = Ingest.execute(IngestConfig(
+      "tester", ref, dir.toString, "data_.*\\.csv",
+      metadata = Some(meta), justCopy = false))
+    assert(report.errors.exists(_.contains("data_1.csv")), report.errors.mkString("; "))
+    assert(spark.table(ref.qualified).count() === report.validRows)
+    assert(report.validRows === 2L)
+    assert(completionRow(ref) === (("Ingest completed with errors",
+      report.processedFiles.size.toLong, report.validRows, report.invalidRows)))
+  }
+
+  test("ingest a header-only csv: both observed counts read 0") {
+    val dir = Files.createTempDirectory("ing_empty_")
+    Files.writeString(dir.resolve("data_1.csv"), "id,amount,note\n")
+    val ref = freshRef("empty")
+    val report = Ingest.execute(IngestConfig(
+      "tester", ref, dir.toString, "data_.*\\.csv",
+      metadata = Some(meta), justCopy = false))
+    assert(report.ok, report.errors.mkString("; "))
+    assert((report.processedFiles, report.validRows, report.invalidRows)
+      === ((Seq("data_1.csv"), 0L, 0L)))
+  }
+
+  test("ingest job budget: each file runs only its read, append and audit " +
+      "jobs; audit rows keep their call order") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val dir = Files.createTempDirectory("ing_budget_")
+    Files.writeString(dir.resolve("data_1.csv"),
+      "id,amount,note\n1,2.5,ok\n,3.0,missing-id\n2,1.0,ok\n")
+    Files.writeString(dir.resolve("data_2.csv"),
+      "id,amount,note\n3,1.0,ok\nx,1.0,bad-id\n")
+    val ref = freshRef("budget")
+    val conf = IngestConfig("tester", ref, dir.toString, "data_.*\\.csv",
+      metadata = Some(meta), justCopy = false)
+    val sc = spark.sparkContext
+    // The call site of every job the run starts: its SQL execution's
+    // (jobs run on a pool thread carry no user frame in their stages'),
+    // else its result stage's.
+    val execSites = scala.collection.concurrent.TrieMap.empty[Long, String]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Option[Long])]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => execSites(s.executionId) = s.description
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add((e.stageInfos.maxBy(_.stageId).name, Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)))
+    }
+    sc.addSparkListener(listener)
+    val first = try {
+      val r = Ingest.execute(conf)
+      org.apache.spark.sql.graftbridge.SessionBridge.waitUntilEmpty(sc)
+      r
+    } finally sc.removeSparkListener(listener)
+    assert(first.ok, first.errors.mkString("; "))
+    assert((first.validRows, first.invalidRows) === ((3L, 2L)))
+    val sites = jobs.asScala.toSeq.map { case (stage, exec) =>
+      exec.flatMap(execSites.get).getOrElse(stage) }
+    assert(!sites.exists(_.startsWith("count")), sites.mkString("; "))
+    // 2 files x (header + inference read, main + _error append, audit
+    // flush) + the final audit flush.
+    assert(sites.size <= 11, sites.mkString("; "))
+
+    val log = s"${ref.database}.box_ingestion_log"
+    assert(spark.table(log).orderBy("process_dt").select("job_action")
+      .collect().map(_.getString(0)).toSeq === Seq(
+        "Created temp directory", "Downloaded file", "Downloaded file",
+        "File processed", "File processed", "Ingest completed"))
+
+    // A second run appends to the tables the first created: the report
+    // carries exactly the rows each table gained.
+    def counts = (spark.table(ref.qualified).count(),
+      spark.table(ref.errorSibling.qualified).count())
+    val (main0, err0) = counts
+    val second = Ingest.execute(conf)
+    assert(second.ok, second.errors.mkString("; "))
+    val (main1, err1) = counts
+    assert((second.validRows, second.invalidRows) === ((main1 - main0, err1 - err0)))
+    assert((second.validRows, second.invalidRows) === ((3L, 2L)))
   }
 
   test("ingest provenance: rows carry their source file; zip members use inner names") {

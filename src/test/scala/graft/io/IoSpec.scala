@@ -139,6 +139,48 @@ class IoSpec extends AnyFunSuite {
     assert(default !== explicit, "UTF-8 default cannot decode latin-1 high bytes")
   }
 
+  test("FormatReader.hasOddQuoteLine: the driver byte scan decides as the " +
+      "Spark text probe it replaced") {
+    import org.apache.spark.sql.functions.{col, length, regexp_replace}
+    val spark = graft.TestSpark.spark
+    val dir = Files.createTempDirectory("fr_quote_")
+    // The probe FormatReader ran before the scan, kept as the reference.
+    def sparkProbe(f: java.nio.file.Path): Boolean =
+      spark.read.text(f.toString)
+        .where((length(col("value")) -
+          length(regexp_replace(col("value"), "\"", ""))) % 2 === 1)
+        .limit(1).count() > 0
+    def bytes(parts: Any*): Array[Byte] = parts.flatMap {
+      case s: String => s.getBytes(java.nio.charset.StandardCharsets.UTF_8).toSeq
+      case b: Int => Seq(b.toByte)
+    }.toArray
+    val E9 = 0xE9 // latin-1 é: not valid UTF-8
+    val Bom = Seq(0xEF, 0xBB, 0xBF)
+    val cases: Seq[(String, Array[Byte], Boolean)] = Seq(
+      ("lf, even quotes", bytes("id,note\n1,\"a\"\n2,b\n"), false),
+      ("lf, quoted newline", bytes("id,note\n1,\"a\nb\"\n"), true),
+      ("crlf, even quotes", bytes("id,note\r\n1,\"a\"\r\n"), false),
+      ("crlf, quoted newline", bytes("id,note\r\n1,\"a\r\nb\"\r\n"), true),
+      ("lone cr, even quotes", bytes("id,note\r1,\"a\"\r2,b\r"), false),
+      ("lone cr, quoted newline", bytes("id,note\r1,\"a\rb\"\r"), true),
+      ("escaped \"\" pair", bytes("id,note\n1,\"say \"\"hi\"\"\"\n"), false),
+      ("odd quote on an unterminated last line", bytes("id,note\n1,\"open"), true),
+      ("latin-1 bytes, no quotes", bytes("id,name\n1,caf", E9, "\n"), false),
+      ("latin-1 bytes, quoted newline",
+        bytes("id,name\n1,\"caf", E9, "\nsuite\"\n"), true),
+      ("utf-8 bom, even quotes", bytes(Bom ++ Seq("id,note\n1,\"a\"\n"): _*), false),
+      ("utf-8 bom, quoted newline", bytes(Bom ++ Seq("id,note\n1,\"a\nb\"\n"): _*), true),
+      ("empty file", Array.emptyByteArray, false),
+      ("latin-1 lead byte before a quote",
+        bytes("id,name\n1,caf", E9, ",\"a\nb\"\n"), true))
+    cases.zipWithIndex.foreach { case ((label, body, expected), i) =>
+      val f = Files.write(dir.resolve(s"case_$i.csv"), body)
+      val scanned = FormatReader.hasOddQuoteLine(f)
+      assert(scanned === expected, label)
+      assert(scanned === sparkProbe(f), s"$label: scan and Spark probe disagree")
+    }
+  }
+
   test("FormatReader.sniffJson: array / lines / columns shapes") {
     val dir = Files.createTempDirectory("fr_sniff_")
     def w(n: String, body: String) = {

@@ -57,16 +57,43 @@ final case class IngestReport(
 
 /** Ingest orchestration (reference O29 / E1):
   * list → regex match → (latest?) → spool → per-file: unzip? → parse →
-  * copy-mode conform | validate+split → append main/_error tables →
-  * (delete?) → audit log at each step. Never throws.
+  * copy-mode conform | validate+split → per batch: append main/_error
+  * tables → (delete?) → audit log at each step. Never throws.
   *
-  * A file costs only its read and write jobs: row counts are observed on
-  * the appends themselves, and the audit rows are buffered and written in
-  * one append when each leaf file ends (processed, skipped or failed) and
-  * once when the run ends. A run that dies keeps the audit rows of every
-  * file it finished.
+  * Each leaf file is read, parsed and split by itself, so schema
+  * inference, read errors and corrupt-file isolation stay per file. The
+  * split frames of up to `defaultParallelism` leaf files, in processing
+  * order, form a batch that is written with one append per target table:
+  * the union of the batch's main sides, then the union of its `_error`
+  * sides. A batch's rows of one table therefore share that append's
+  * `process_dt`. Row counts are observed per file on the appends
+  * themselves. If a table's union append fails, each file's side of that
+  * table is appended alone, so only the files whose own append fails are
+  * reported failed (a copy-mode value that its target column's type
+  * cannot hold, a corrupt page found at write time); their later appends
+  * are not attempted, and counts of the appends that landed stay in the
+  * report. A table whose union append landed is not written again.
+  *
+  * Audit rows are buffered and written in one append after each batch's
+  * appends and once when the run ends; `File processed` rows are logged
+  * after their batch's appends. A run that dies keeps every audit row
+  * logged before the end of the last batch it wrote.
   */
 object Ingest {
+
+  /** A parsed leaf file waiting for its batch's appends: `sides` maps each
+    * target table, in append order, to the frame it gets; `raw` is the
+    * persisted frame those frames read. */
+  private final case class Leaf(name: String, raw: DataFrame, sides: Seq[(TableRef, DataFrame)])
+
+  /** Appends the union of `frames` to `table` and returns each frame's row
+    * count, observed on the write itself. */
+  private def appendCounted(frames: Seq[DataFrame], table: TableRef): Seq[Long] = {
+    val obs = frames.map(_ => Observation())
+    TableSink.append(frames.zip(obs).map { case (df, o) => df.observe(o, count(lit(1)).as("n")) }
+      .reduce(_ unionByName _), table)
+    obs.map(_.get("n").asInstanceOf[Long])
+  }
 
   def execute(conf: IngestConfig, store: ObjectStore = new LocalStore)(
       implicit spark: SparkSession): IngestReport = {
@@ -85,12 +112,44 @@ object Ingest {
       }
     }
 
-    /** Appends `df` through `write` and returns the rows it wrote,
-      * counted in the same pass. */
-    def appendCounted(df: DataFrame)(write: DataFrame => Unit): Long = {
-      val obs = Observation()
-      write(df.observe(obs, count(lit(1)).as("n")))
-      obs.get("n").asInstanceOf[Long]
+    // One batch fills the cores once: every file is at least one write task.
+    val batchSize = spark.sparkContext.defaultParallelism
+    val batch = ListBuffer.empty[Leaf]
+
+    /** Appends the batch, one table at a time in the order the sides
+      * name them, and logs the outcome of each of its files. */
+    def writeBatch(): Unit = if (batch.nonEmpty) {
+      val leaves = batch.toList
+      batch.clear()
+      var live = leaves
+      def fail(l: Leaf, e: Throwable): Unit = {
+        errors += s"process ${l.name}: ${e.getMessage}"
+        log("File processing failed", s"${l.name}: ${e.getMessage}")
+      }
+      try {
+        leaves.flatMap(_.sides.map(_._1)).distinct.foreach { table =>
+          // Each count lands as soon as its append does, so a failed later
+          // append cannot hide rows this table now holds.
+          def add(n: Seq[Long]): Unit =
+            if (table == conf.table) validRows += n.sum else invalidRows += n.sum
+          def frames(ls: Seq[Leaf]) = ls.flatMap(_.sides.collect { case (`table`, df) => df })
+          val writers = live.filter(l => frames(Seq(l)).nonEmpty)
+          if (writers.nonEmpty) try add(appendCounted(frames(writers), table))
+          catch { case NonFatal(e) =>
+            // Find the files that fail on their own; the others land alone.
+            val failed = if (writers.size == 1) { fail(writers.head, e); writers }
+              else writers.filterNot { l =>
+                try { add(appendCounted(frames(Seq(l)), table)); true }
+                catch { case NonFatal(e1) => fail(l, e1); false }
+              }
+            live = live.filterNot(failed.contains)
+          }
+        }
+        live.foreach { l => processed += l.name; log("File processed", l.name) }
+      } finally {
+        leaves.foreach(_.raw.unpersist())
+        flushAudit()
+      }
     }
 
     // Per-run spool dir, removed in finally (the reference rmtree's its
@@ -119,6 +178,21 @@ object Ingest {
           errors += s"download ${st.name}: ${e.getMessage}"
           log("Download failed", s"${st.name}: ${e.getMessage}")
           None
+        }
+      }
+
+      /** The frames one parsed leaf file appends, by target table. */
+      def sidesOf(raw: DataFrame, fname: String): Seq[(TableRef, DataFrame)] = {
+        def prov(df: DataFrame) =
+          conf.sourceFileCol.fold(df)(c => df.withColumn(c, lit(fname)))
+        if (conf.justCopy) // O22: conform to target schema minus process_dt.
+          Seq(conf.table -> TableSink.conform(prov(raw), conf.table))
+        else {
+          val meta = conf.metadata.getOrElse(throw new IllegalArgumentException(
+            "metadata required when justCopy=false"))
+          val split = ValidateAndSplit(raw, meta)
+          Seq(conf.table -> prov(split.valid),                  // O21
+            conf.table.errorSibling -> prov(split.invalid))
         }
       }
 
@@ -156,36 +230,18 @@ object Ingest {
               // O10 happens inside ValidateAndSplit; for copy mode conform
               // handles names. Cache: both split sides scan this frame.
               val raw = raw0.persist(StorageLevel.MEMORY_AND_DISK)
-              def prov(df: DataFrame) =
-                conf.sourceFileCol.fold(df)(c => df.withColumn(c, lit(fname)))
-              try {
-                if (conf.justCopy) {
-                  // O22: conform to target schema minus process_dt.
-                  validRows += appendCounted(prov(raw))(
-                    TableSink.appendConformed(_, conf.table))
-                } else {
-                  val meta = conf.metadata.getOrElse(throw new IllegalArgumentException(
-                    "metadata required when justCopy=false"))
-                  val split = ValidateAndSplit(raw, meta)
-                  // Each side's count lands as soon as its own append
-                  // does, so a failed _error append cannot hide rows the
-                  // main table already holds.
-                  validRows += appendCounted(prov(split.valid))(
-                    TableSink.append(_, conf.table))     // O21
-                  invalidRows += appendCounted(prov(split.invalid))(
-                    TableSink.append(_, conf.table.errorSibling))
-                }
-              } finally raw.unpersist()
-              processed += fname
-              log("File processed", fname)
+              try batch += Leaf(fname, raw, sidesOf(raw, fname))
+              catch { case NonFatal(e) => raw.unpersist(); throw e }
           }
         } catch { case NonFatal(e) =>
           errors += s"process $fname: ${e.getMessage}"
           log("File processing failed", s"$fname: ${e.getMessage}")
-        } finally flushAudit()
+        }
+        if (batch.size >= batchSize) writeBatch()
       }
 
       spooled.foreach(processFile)
+      writeBatch()
 
       // O24: optional post-ingest source cleanup of the matched names.
       if (conf.delete) matched.foreach { st =>
@@ -199,6 +255,7 @@ object Ingest {
       errors += s"ingest failed: ${e.getMessage}"
       log("Ingest failed", e.getMessage) // E1: failure is log-only
     } finally {
+      batch.foreach(_.raw.unpersist()) // only left by a fatal error
       flushAudit()
       if (tmp != null) try {
         val walk = Files.walk(tmp)

@@ -3117,17 +3117,7 @@ object ExtensionQueries {
           (id, Multimodal.SyntheticImages.bmpGradient(sig, topDown = id % 2 == 1))
         }.toDF("media_id", "content")
         .write.mode("overwrite").parquet(tmp.resolve("out").toString)
-      // A dir without _SUCCESS is a crashed partial build — clear it.
-      if (java.nio.file.Files.exists(dir) &&
-          !java.nio.file.Files.exists(dir.resolve("_SUCCESS"))) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-      try java.nio.file.Files.move(tmp.resolve("out"), dir,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException
-          | _: java.nio.file.AccessDeniedException => () }
+      Fixtures.publish(tmp, tmp.resolve("out"), dir, "_SUCCESS")
     }
     dir.toString
   }

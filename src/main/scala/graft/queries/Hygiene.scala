@@ -1549,22 +1549,12 @@ object HygieneQueries {
       sys.props("java.io.tmpdir"), s"graft_t44_nb_$key")
     if (!java.nio.file.Files.exists(dir.resolve("meta.parquet"))) {
       val tmp = java.nio.file.Files.createTempDirectory("graft_t44_build_")
-        .resolve("nb_model").toString
+      val model = tmp.resolve("nb_model")
       val (tok, cls) = TextAnalysis.nbCounts(docs, "text", "lang")
-      TextAnalysis.nbSaveModel(tmp, tok, cls)
+      TextAnalysis.nbSaveModel(model.toString, tok, cls)
       // meta.parquet is written LAST by nbSaveModel, so its presence
-      // under the published dir implies a complete model; a dir
-      // without it is a crashed partial publish — clear and retry.
-      if (java.nio.file.Files.exists(dir) &&
-          !java.nio.file.Files.exists(dir.resolve("meta.parquet"))) {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-          .foreach(java.nio.file.Files.deleteIfExists(_))
-      }
-      try java.nio.file.Files.move(java.nio.file.Paths.get(tmp), dir,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException
-          | _: java.nio.file.AccessDeniedException => () }
+      // under the published dir implies a complete model.
+      Fixtures.publish(tmp, model, dir, "meta.parquet")
     }
     dir.toString
   }

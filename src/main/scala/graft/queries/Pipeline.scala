@@ -1711,8 +1711,8 @@ object PipelineQueries {
         col("http_body").as("body"))
 
   /** Writes the p2/p3 WARC shards for `d` to a content-stable temp dir
-    * on first use (the m5 fixture pattern: atomic publish via rename,
-    * losers of a cross-process race reuse the winner's dir) — shard
+    * on first use (published by [[Fixtures.publish]]: losers of a race
+    * reuse the winner's dir) — shard
     * WRITING collects documents to the driver, which belongs in
     * fixture setup, not inside the timed query. Returns the dir. */
   private def warcFixture(s: SparkSession, d: String): String = {
@@ -1748,17 +1748,8 @@ object PipelineQueries {
       val (even, odd) = docs.toSeq.partition(_._1 % 2 == 0)
       shard(even, "shard0.warc")
       shard(odd, "shard1.warc")
-      // shard1 is written LAST, so its presence marks a complete dir; a
-      // dir without it is a crashed partial build — clear and retry.
-      if (Files.exists(dir) && !Files.exists(dir.resolve("shard1.warc"))) {
-        import scala.jdk.CollectionConverters._
-        Files.walk(dir).iterator().asScala.toSeq.reverse
-          .foreach(Files.deleteIfExists(_))
-      }
-      try Files.move(tmp, dir,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch { case _: java.nio.file.FileAlreadyExistsException
-          | _: java.nio.file.AccessDeniedException => () }
+      // shard1 is written LAST, so its presence marks a complete dir.
+      Fixtures.publish(tmp, tmp, dir, "shard1.warc")
     }
     dir.toString
   }

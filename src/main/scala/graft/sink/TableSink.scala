@@ -156,9 +156,9 @@ object TableSink {
   /** O22 copy mode: conform an arbitrary incoming frame to the target
     * table's schema minus `process_dt`, casting through string exactly as
     * the reference does (`astype(str)` then target types,
-    * box_ingest.py:163-168), then append.
+    * box_ingest.py:163-168), ready for [[append]].
     */
-  def appendConformed(df: DataFrame, ref: TableRef): Unit = {
+  def conform(df: DataFrame, ref: TableRef): DataFrame = {
     val spark = df.sparkSession
     val target = spark.table(ref.qualified).schema
       .filterNot(f => f.name.equalsIgnoreCase(ProcessDtCol) ||
@@ -172,6 +172,6 @@ object TableSink {
         case None => lit(null).cast(f.dataType).as(f.name)
       }
     }
-    append(df.select(cols: _*), ref)
+    df.select(cols: _*)
   }
 }

@@ -168,9 +168,10 @@ class IngestExportSpec extends AnyFunSuite {
     val sites = jobs.asScala.toSeq.map { case (stage, exec) =>
       exec.flatMap(execSites.get).getOrElse(stage) }
     assert(!sites.exists(_.startsWith("count")), sites.mkString("; "))
-    // 2 files x (header + inference read, main + _error append, audit
-    // flush) + the final audit flush.
-    assert(sites.size <= 11, sites.mkString("; "))
+    // 2 files x (header + inference read), then one batch: the main
+    // append, the _error append and the batch's audit flush, then the
+    // final audit flush.
+    assert(sites.size <= 8, sites.mkString("; "))
 
     val log = s"${ref.database}.box_ingestion_log"
     assert(spark.table(log).orderBy("process_dt").select("job_action")
@@ -188,6 +189,198 @@ class IngestExportSpec extends AnyFunSuite {
     val (main1, err1) = counts
     assert((second.validRows, second.invalidRows) === ((main1 - main0, err1 - err0)))
     assert((second.validRows, second.invalidRows) === ((3L, 2L)))
+  }
+
+  test("ingest batch failure: a failed main append fails every file of its " +
+      "batch and skips the batch's _error append") {
+    val dir = Files.createTempDirectory("ing_batchfail_")
+    Files.writeString(dir.resolve("data_1.csv"), "id,amount,note\n1,2.5,ok\n,3.0,missing-id\n")
+    Files.writeString(dir.resolve("data_2.csv"), "id,amount,note\n2,1.0,ok\n")
+    val ref = freshRef("batchfail")
+    // A main table whose schema no split frame fits.
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS `${ref.database}`")
+    spark.sql(s"CREATE TABLE ${ref.qualified} (x INT) USING parquet")
+    val report = Ingest.execute(IngestConfig(
+      "tester", ref, dir.toString, "data_.*\\.csv",
+      metadata = Some(meta), justCopy = false))
+    assert(Seq("data_1.csv", "data_2.csv").forall(f =>
+      report.errors.exists(_.startsWith(s"process $f: "))), report.errors.mkString("; "))
+    assert((report.processedFiles, report.validRows, report.invalidRows) === ((Nil, 0L, 0L)))
+    assert(!spark.catalog.tableExists(ref.errorSibling.qualified))
+    assert(spark.table(ref.qualified).count() === 0L)
+    val failed = spark.table(s"${ref.database}.box_ingestion_log")
+      .where("job_action = 'File processing failed'").count()
+    assert(failed === 2L)
+    assert(completionRow(ref) === (("Ingest completed with errors",
+      report.processedFiles.size.toLong, report.validRows, report.invalidRows)))
+  }
+
+  test("ingest batch with one bad copy-mode file: only that file fails, " +
+      "the others land once") {
+    val dir = Files.createTempDirectory("ing_onebad_")
+    Files.writeString(dir.resolve("data_1.csv"), "id,amount,note\n1,2.5,ok\n2,1.0,ok\n")
+    Files.writeString(dir.resolve("data_2.csv"), "id,amount,note\n3,1.0,ok\nbad,1.0,bad-id\n")
+    Files.writeString(dir.resolve("data_3.csv"), "id,amount,note\n4,4.0,ok\n")
+    val ref = freshRef("onebad")
+    spark.sql(s"CREATE DATABASE IF NOT EXISTS `${ref.database}`")
+    spark.sql(s"""CREATE TABLE ${ref.qualified}
+      (id BIGINT, amount DOUBLE, note STRING, process_dt TIMESTAMP) USING parquet""")
+    val report = Ingest.execute(IngestConfig("tester", ref, dir.toString, "data_.*\\.csv"))
+    assert(report.errors.size === 1 && report.errors.head.startsWith("process data_2.csv: "),
+      report.errors.mkString("; "))
+    assert((report.processedFiles.toSet, report.validRows, report.invalidRows) ===
+      ((Set("data_1.csv", "data_3.csv"), 3L, 0L)))
+    assert(spark.table(ref.qualified).select("id").collect().map(_.getLong(0)).sorted ===
+      Array(1L, 2L, 4L))
+    val actions = spark.table(s"${ref.database}.box_ingestion_log")
+      .groupBy("job_action").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert((actions("File processed"), actions("File processing failed")) === ((2L, 1L)))
+    assert(completionRow(ref) === (("Ingest completed with errors",
+      report.processedFiles.size.toLong, report.validRows, report.invalidRows)))
+  }
+
+  test("ingest batch with a page that fails at write time: only that file " +
+      "fails, the new tables hold the others") {
+    val dir = Files.createTempDirectory("ing_badpage_")
+    Files.writeString(dir.resolve("data_1.csv"), "id,amount,note\n1,2.5,ok\n,3.0,missing-id\n")
+    // A parquet file whose footer reads but whose first page header is
+    // zeroed: the read plans, and fails only when the append runs it.
+    val pq = Files.createTempDirectory("ing_badpage_pq_").resolve("out")
+    spark.range(3).selectExpr("cast(id as int) id", "1.5 amount", "'pq' note")
+      .coalesce(1).write.parquet(pq.toString)
+    val listing = Files.list(pq)
+    val part = try listing.iterator().asScala.find(_.toString.endsWith(".parquet")).get
+      finally listing.close()
+    val bytes = Files.readAllBytes(part)
+    java.util.Arrays.fill(bytes, 4, 36, 0.toByte)
+    Files.write(dir.resolve("data_2.parquet"), bytes)
+    val ref = freshRef("badpage")
+    val report = Ingest.execute(IngestConfig(
+      "tester", ref, dir.toString, "data_.*", metadata = Some(meta), justCopy = false))
+    assert(report.errors.size === 1 && report.errors.head.startsWith("process data_2.parquet: "),
+      report.errors.mkString("; "))
+    assert((report.processedFiles, report.validRows, report.invalidRows) ===
+      ((Seq("data_1.csv"), 1L, 1L)))
+    assert(spark.table(ref.qualified).count() === 1L)
+    assert(spark.table(ref.errorSibling.qualified).count() === 1L)
+    assert(completionRow(ref) === (("Ingest completed with errors",
+      report.processedFiles.size.toLong, report.validRows, report.invalidRows)))
+  }
+
+  /** A folder of every leaf kind the reader handles, with more leaf files
+    * than the test session's cores so that a folder run writes at least
+    * two batches: name → bytes. */
+  private def mixedFolder(): Seq[(String, Array[Byte])] = {
+    def utf8(s: String) = s.getBytes("UTF-8")
+    val zip = new java.io.ByteArrayOutputStream()
+    val z = new ZipOutputStream(zip)
+    Seq("z_inner_1.csv" -> "id,amount,note\n30,3.5,zipped\nbad,1.0,bad-id\n",
+        "z_inner_2.csv" -> "id,amount,note\n31,4.5,zipped-too\n").foreach { case (n, c) =>
+      z.putNextEntry(new ZipEntry(n)); z.write(utf8(c)); z.closeEntry()
+    }
+    z.close()
+    val tgz = new java.io.ByteArrayOutputStream()
+    val gz = new java.util.zip.GZIPOutputStream(tgz)
+    graft.io.Tar.write(gz, Seq(
+      "t_inner_1.csv" -> utf8("id,amount,note\n40,1.0,tarred\n,2.0,no-id\n"),
+      "t_inner_2.csv" -> utf8("id,amount,note\n41,2.0,tarred-too\n")))
+    gz.close()
+    val xlsx = new java.io.ByteArrayOutputStream()
+    Xlsx.write(xlsx, "data", Seq("id", "amount", "note"),
+      Iterator(Seq("50", "5.25", "sheet"), Seq("51", "oops", "bad-amount")))
+    Seq(
+      "a_quoted.csv" -> utf8("id,amount,note\n1,1.5,\"two\nlines\"\n2,,ok\n,9.0,no-id\n"),
+      "b_lines.json" -> utf8("{\"id\":10,\"amount\":1.0,\"note\":\"jl\"}\n" +
+        "{\"id\":null,\"amount\":2.0,\"note\":\"null-id\"}\n"),
+      "c_array.json" -> utf8("""[{"id": 11, "amount": 3.0, "note": "arr"},
+        |{"id": 12, "amount": 4.0, "note": "arr2"}]""".stripMargin),
+      "d_columns.json" -> utf8("""{"id": {"0": 13, "1": 14},
+        |"amount": {"0": 5.0, "1": 6.0}, "note": {"0": "col", "1": "col2"}}""".stripMargin),
+      "e_bundle.zip" -> zip.toByteArray,
+      "f_bundle.tgz" -> tgz.toByteArray,
+      "g_book.xlsx" -> xlsx.toByteArray,
+      "h_drift.csv" -> utf8(" ID ,Amount, NOTE \n60,6.0,drift\n61,x,bad-amount\n"),
+      "i_broken.xlsx" -> utf8("not a workbook"),
+      "j_notes.txt" -> utf8("skipped"))
+  }
+
+  /** Rows of `table` without the append's timestamp columns, as a
+    * multiset; an absent table holds none. */
+  private def rowBag(table: String, cols: String*): Map[String, Int] =
+    if (!spark.catalog.tableExists(table)) Map.empty
+    else {
+      val df = spark.table(table)
+      val keep = if (cols.nonEmpty) cols
+        else df.columns.toSeq.filterNot(Set("process_dt", "process_date"))
+      df.selectExpr(keep.map(c => s"`$c`"): _*).collect().toSeq
+        .map(_.toSeq.mkString("\u0001")).groupBy(identity).map { case (k, v) => k -> v.size }
+    }
+
+  private def sumBags(bags: Seq[Map[String, Int]]): Map[String, Int] =
+    bags.flatten.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sum }
+
+  /** The files a run's errors name. */
+  private def failedFiles(r: IngestReport): Set[String] =
+    r.errors.map(_.stripPrefix("process ").takeWhile(_ != ':')).toSet
+
+  /** Ingests the mixed folder once and each of its files alone (batches
+    * of one file), and checks the folder run against the union of the
+    * single-file runs; the files named by `failed` fail in both.
+    * `prepare` sets up a run's fresh tables. */
+  private def folderEqualsSingles(tag: String, justCopy: Boolean, failed: Set[String])(
+      prepare: TableRef => Unit): Unit = {
+    val files = mixedFolder()
+    def run(name: String, content: Seq[(String, Array[Byte])]) = {
+      val dir = Files.createTempDirectory(s"ing_${name}_")
+      content.foreach { case (n, b) => Files.write(dir.resolve(n), b) }
+      val ref = freshRef(name)
+      prepare(ref)
+      ref -> Ingest.execute(IngestConfig("tester", ref, dir.toString,
+        ".*\\.(csv|json|zip|tgz|xlsx|txt)", metadata = Some(meta), justCopy = justCopy,
+        sourceFileCol = Some("_src")))
+    }
+    // The runs share one audit table, which each run's fresh tables drop:
+    // the folder runs last so that its audit rows stay.
+    val singles = files.zipWithIndex.map { case (f, i) => run(s"${tag}_one$i", Seq(f)) }
+    val (ref, folder) = run(s"${tag}_all", files)
+    // Every leaf but the unreadable one reaches a batch.
+    assert(folder.processedFiles.size + (failed - "i_broken.xlsx").size >
+      spark.sparkContext.defaultParallelism, "the folder run must write more than one batch")
+
+    assert(rowBag(ref.qualified) ===
+      sumBags(singles.map { case (r, _) => rowBag(r.qualified) }))
+    assert(rowBag(ref.errorSibling.qualified, "record", "error_type") ===
+      sumBags(singles.map { case (r, _) => rowBag(r.errorSibling.qualified, "record", "error_type") }))
+    assert(folder.processedFiles.toSet === singles.flatMap(_._2.processedFiles).toSet)
+    assert(folder.processedFiles.size === singles.map(_._2.processedFiles.size).sum)
+    assert((folder.validRows, folder.invalidRows) ===
+      ((singles.map(_._2.validRows).sum, singles.map(_._2.invalidRows).sum)))
+    assert(folder.errors.size === failed.size && failedFiles(folder) === failed,
+      folder.errors.mkString("; "))
+    assert(singles.map(r => failedFiles(r._2)).reduce(_ ++ _) === failed)
+    val auditLog = spark.table(s"${ref.database}.box_ingestion_log")
+    val processedRows = auditLog.where("job_action = 'File processed'").select("log_info")
+      .collect().map(_.getString(0)).toSeq
+    assert(processedRows.sorted === folder.processedFiles.sorted)
+    assert(auditLog.where("job_action = 'File processing failed'").count() === failed.size.toLong)
+    assert(completionRow(ref) === (("Ingest completed with errors",
+      folder.processedFiles.size.toLong, folder.validRows, folder.invalidRows)))
+  }
+
+  test("ingest folder equals its per-file ingests: validate mode, two batches") {
+    folderEqualsSingles("fold_v", justCopy = false, Set("i_broken.xlsx"))(_ => ())
+  }
+
+  test("ingest folder equals its per-file ingests: copy mode, two batches") {
+    // The files with a planted id or amount that the typed target cannot
+    // hold fail their cast, in the folder run as alone.
+    folderEqualsSingles("fold_c", justCopy = true,
+        Set("i_broken.xlsx", "z_inner_1.csv", "g_book.xlsx", "h_drift.csv")) { ref =>
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS ${ref.database}")
+      spark.sql(s"""CREATE TABLE ${ref.qualified}
+        (id BIGINT, amount DOUBLE, note STRING, _src STRING, process_dt TIMESTAMP)
+        USING parquet""")
+    }
   }
 
   test("ingest provenance: rows carry their source file; zip members use inner names") {

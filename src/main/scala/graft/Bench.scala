@@ -260,21 +260,9 @@ object Bench {
       .appName("graft-bench")
       .config("spark.sql.shuffle.partitions", shuffle)
       .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalesce floor, env-pinnable for A/B runs. The measured
-      // default stays Spark's 1 MB: a 64 KB floor un-collapsed the
-      // CPU-heavy small shuffles (d16 3.47 -> 1.93) but taxed every
-      // many-exchange pipeline with swarms of sub-ms tasks (p8
-      // 9.4 -> 12.4, g1 6.6 -> 8.4 in the same windows) - a net loss,
-      // so this knob stays a deployment-level tuning point. An
-      // operator-level fix was attempted and REVERTED: an explicit
-      // REPARTITION_BY_NUM key-repartition ahead of the bucketPairs
-      // expansion still came out coalesced at runtime in the gate's
-      // plan shape (1 task at the 1 MB floor, 5 at 64 KB, 32 with
-      // coalescing disabled - i.e. the floor governed regardless),
-      // while isolated reproductions of the same subtree respect it;
-      // see OPTIMIZATION_r17.md "Not yet optimized".
+      // Spark's 1 MB floor: a 64 KB one lost net (OPTIMIZATION_r17.md #8).
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION", "1048576"))
+        "1048576")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -291,9 +279,7 @@ object Bench {
     // round-7 probe's catch). This is the sizing a real cluster derives
     // from first-run shuffle-write metrics instead of a global constant.
     val bytes = math.max(inputBytes(sfDir), 1L)
-    // SPARK_GRAFT_INITIAL_PARTS pins the value for every query (A/B runs).
-    val pinnedInitial = sys.env.get("SPARK_GRAFT_INITIAL_PARTS").map(_.toInt)
-    def initialFor(name: String): Int = pinnedInitial.getOrElse {
+    def initialFor(name: String): Int = {
       val amp = shuffleAmp.getOrElse(name, 1L)
       val sized = (bytes * amp) / (4L << 20)
       math.max(cpusN, math.min(512L, sized)).toInt
@@ -367,9 +353,8 @@ object Bench {
     // spread >2x (a transient inside its own window), is re-measured
     // ONCE here — after the main loop, i.e. temporally outside the
     // window — and the min is kept. Single-run probe protocol (RUNS=1)
-    // skips it; SPARK_GRAFT_BENCH_RETRY overrides.
-    val retry = sys.env.get("SPARK_GRAFT_BENCH_RETRY")
-      .map(_ != "0").getOrElse(runs > 1)
+    // skips it.
+    val retry = runs > 1
     val refStamp = {
       val ss = (stamps.values ++ Seq(mbps)).toSeq.sorted
       ss(ss.size / 2)

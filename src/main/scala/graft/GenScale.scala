@@ -225,8 +225,9 @@ object GenScale {
     // the fixture's planted 3-bit-flip near-dup pairs (dense ranks
     // make the pair partner always present, which the zipf id remap's
     // sparse id space would not). The m5 gate reads this table via
-    // the imageFixture media.parquet override; ImageDupProbe prints
-    // the effect sizes. Dense rank via one single-partition window:
+    // the imageFixture media.parquet override (its flood-vs-cap effect
+    // sizes are in SCALEPROBE_r17.json `image_dup_flood_vs_cap`).
+    // Dense rank via one single-partition window:
     // dev tooling over row counts this box generates, not a prod path.
     if (zipf) {
       import spark.implicits._

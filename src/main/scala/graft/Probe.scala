@@ -9,9 +9,9 @@ import org.apache.spark.sql.SparkSession
   * use when the full Bench protocol (warm-up, min-of-three, disk floor)
   * is not the question.
   *
-  * Also the harness the other measurement mains run on: [[session]] is
-  * their one local session, with a [[Trace]] attached, and [[timed]]
-  * their one timer.
+  * [[session]] is also the local session, with a [[Trace]] attached,
+  * that [[StageProfile]], [[Plans]] and [[GenScale]] run on, and
+  * [[timed]] the timer `StageProfile` reads its wall from.
   *
   * Usage: runMain graft.Probe <sfDir> <gate1> [gate2 ...]
   */
@@ -56,12 +56,6 @@ object Probe {
     val dir = args(0)
     val names = args.drop(1)
     val spark = session("graft-probe")
-    // SPARK_GRAFT_CHECKPOINT_DIR switches every Scale.materialize in the
-    // probed queries from local blocks to RELIABLE checkpoint files (the
-    // cluster deployment's configuration) — the g1/g2 multi-TB
-    // checkpoint-cost A/B runs the same gate with and without it.
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .foreach(spark.sparkContext.setCheckpointDir)
     names.zipWithIndex.foreach { case (n, i) =>
       val fn = SparkEntry.queries(n)
       // ONE materialization: the row count rides the noop pass as an

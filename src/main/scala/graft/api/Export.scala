@@ -152,14 +152,18 @@ object Export {
                 org.apache.spark.sql.functions.lit(1)).as("n"))
               .coalesce(1)
               .write.mode("overwrite").format(fmt).save(tmp.toString)
-            val part = Files.list(tmp).iterator().asScala
-              .find(_.getFileName.toString.startsWith("part-"))
-              .getOrElse(throw new IllegalStateException(s"no $fmt part written"))
+            val listing = Files.list(tmp)
+            val part = try listing.iterator().asScala
+                .find(_.getFileName.toString.startsWith("part-"))
+                .getOrElse(throw new IllegalStateException(s"no $fmt part written"))
+              finally listing.close()
             store.putOverwrite(conf.folder, conf.fileName,
               out => Files.copy(part, out))
             rows = obs.get("n").asInstanceOf[Long]
           } finally {
-            Files.list(tmp).iterator().asScala.foreach(Files.deleteIfExists(_))
+            val leftovers = Files.list(tmp)
+            try leftovers.iterator().asScala.foreach(Files.deleteIfExists(_))
+            finally leftovers.close()
             Files.deleteIfExists(tmp)
           }
       }

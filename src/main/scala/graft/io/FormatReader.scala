@@ -29,7 +29,6 @@ object FormatReader {
   def read(spark: SparkSession, file: Path,
       sheetName: Option[String] = None, skipRows: Int = 0,
       encoding: Option[String] = None,
-      fwfInferLines: Int = 100,
       allSheets: Boolean = false): ReadResult = {
     val name = file.getFileName.toString.toLowerCase
     val ext = name.drop(name.lastIndexOf('.') + 1)
@@ -86,7 +85,7 @@ object FormatReader {
       // in every sampled line. Mainframe/ERP extracts still arrive in
       // this shape; see fromFwf for the inference contract.
       case "fwf" =>
-        Parsed(fromFwf(spark, file, fwfInferLines))
+        Parsed(fromFwf(spark, file))
       case other =>
         Unsupported(s"Unsupported file type: .$other")
     }

@@ -41,12 +41,14 @@ final class LocalStore extends ObjectStore {
   override def list(folder: String): Seq[ObjectStat] = {
     val dir = Paths.get(folder)
     if (!Files.isDirectory(dir)) return Nil
-    Files.list(dir).iterator().asScala
+    val listing = Files.list(dir)
+    try listing.iterator().asScala
       .filter(Files.isRegularFile(_))
       .map(f => ObjectStat(f.getFileName.toString,
         Files.getLastModifiedTime(f).toMillis, Files.size(f)))
       .filterNot(s => ObjectStore.isHidden(s.name))
-      .toSeq.sortBy(_.name)
+      .toList.sortBy(_.name)
+    finally listing.close()
   }
 
   override def open(folder: String, name: String): InputStream =

@@ -22,21 +22,15 @@ final case class FieldSpec(name: String, typeName: String, nullable: Boolean) {
     case "timestamp" => TimestampType
     case _           => StringType
   }
-
-  def structField: StructField = StructField(outName, dataType, nullable)
 }
 
-/** A declared table schema: ordered fields + non-nullable set.
+/** A declared table schema: ordered fields, each with its nullability.
   *
   * The reference models this as `Dict[col -> type]` with a magic key
   * `"non_nullable_fields": List[str]` (box_ingest.py:93-94, :171). Here it
   * is a typed structure; `fromMetadata` accepts the dict-shaped form.
   */
-final case class TableMeta(fields: Seq[FieldSpec]) {
-  def structType: StructType = StructType(fields.map(_.structField))
-  def nonNullable: Set[String] = fields.filterNot(_.nullable).map(_.outName).toSet
-  def outNames: Seq[String] = fields.map(_.outName)
-}
+final case class TableMeta(fields: Seq[FieldSpec])
 
 object TableMeta {
   /** Build from the reference's metadata-dict shape: an ordered list of

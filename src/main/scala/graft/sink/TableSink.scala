@@ -97,18 +97,7 @@ object TableSink {
         .mkString(", ")
       spark.sql(s"ALTER TABLE ${ref.qualified} ADD COLUMNS ($ddl)")
     }
-    val after = spark.table(ref.qualified).schema
-      .filterNot(f => f.name.equalsIgnoreCase(ProcessDtCol) ||
-        f.name.equalsIgnoreCase(DateCol))
-    val byLower = df.columns.map(c => c.toLowerCase -> c).toMap
-    val conformed = after.map { f =>
-      byLower.get(f.name.toLowerCase) match {
-        case Some(in) =>
-          col(s"`${in.replace("`", "``")}`").cast(f.dataType).as(f.name)
-        case None => lit(null).cast(f.dataType).as(f.name)
-      }
-    }
-    append(df.select(conformed: _*), ref)
+    append(toTable(df, ref, identity), ref)
   }
 
   /** Compact a managed parquet table's files — the operational answer to
@@ -158,20 +147,25 @@ object TableSink {
     * the reference does (`astype(str)` then target types,
     * box_ingest.py:163-168), ready for [[append]].
     */
-  def conform(df: DataFrame, ref: TableRef): DataFrame = {
-    val spark = df.sparkSession
-    val target = spark.table(ref.qualified).schema
+  def conform(df: DataFrame, ref: TableRef): DataFrame =
+    toTable(df, ref, _.cast(StringType))
+
+  /** `df` projected onto the table's columns minus `process_dt` /
+    * `process_date`: each matched by lower-cased name (the first of
+    * several case variants wins), passed through `pre`, then cast to
+    * the table's type; a column `df` lacks null-fills. */
+  private def toTable(df: DataFrame, ref: TableRef,
+      pre: Column => Column): DataFrame = {
+    val target = df.sparkSession.table(ref.qualified).schema
       .filterNot(f => f.name.equalsIgnoreCase(ProcessDtCol) ||
         f.name.equalsIgnoreCase(DateCol))
     val byLower = df.columns.reverse.map(c => c.toLowerCase -> c).toMap
-    val cols = target.map { f =>
+    df.select(target.map { f =>
       byLower.get(f.name.toLowerCase) match {
         case Some(in) =>
-          col(s"`${in.replace("`", "``")}`")
-            .cast(StringType).cast(f.dataType).as(f.name)
+          pre(col(s"`${in.replace("`", "``")}`")).cast(f.dataType).as(f.name)
         case None => lit(null).cast(f.dataType).as(f.name)
       }
-    }
-    df.select(cols: _*)
+    }: _*)
   }
 }

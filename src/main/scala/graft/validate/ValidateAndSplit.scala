@@ -66,35 +66,39 @@ object ValidateAndSplit {
     val byLower: Map[String, String] =
       df.columns.reverse.map(c => c.toLowerCase -> c).toMap
 
-    val perField: Seq[(FieldSpec, Option[String])] =
-      meta.fields.map(f => f -> byLower.get(f.outName))
+    // Each declared field's input column (if any) and its typed value,
+    // built once and shared by the type-mismatch check, the rule
+    // resolver and the valid projection.
+    val perField: Seq[(FieldSpec, Option[String], Column)] =
+      meta.fields.map { f =>
+        val in = byLower.get(f.outName)
+        val typed = in.fold(lit(null).cast(f.dataType))(i =>
+          castedOrNull(col(quoted(i)), df.schema(i).dataType, f))
+        (f, in, typed)
+      }
 
     // One error expression per declared field (null => no error).
     val errExprs: Seq[Column] = perField.map {
-      case (f, None) =>
+      case (f, None, _) =>
         // O12: constant per file — reference re-checks per row
         // (box_ingest.py:96-97); the answer is the same for every row.
         // Messages carry the DECLARED-case name (reference interpolates the
         // metadata key itself, box_ingest.py:96-119); outName is only for
         // resolution and output naming.
         lit(s"Missing column: ${f.name}")
-      case (f, Some(in)) =>
+      case (f, Some(in), typed) =>
         val c = col(quoted(in))
         val nullErr =
           if (f.nullable) lit(null).cast(StringType)
           else when(c.isNull, lit(s"Null value in non-nullable column: ${f.name}"))
-        val castErr = when(
-          c.isNotNull && castedOrNull(c, df.schema(in).dataType, f).isNull,
+        val castErr = when(c.isNotNull && typed.isNull,
           lit(s"Type mismatch for column: ${f.name}"))
         coalesce(nullErr, castErr)
     }
 
     // Typed view of every declared field, for rule predicates.
-    val typedByName: Map[String, Column] = perField.map {
-      case (f, None)     => f.outName -> lit(null).cast(f.dataType)
-      case (f, Some(in)) =>
-        f.outName -> castedOrNull(col(quoted(in)), df.schema(in).dataType, f)
-    }.toMap
+    val typedByName: Map[String, Column] =
+      perField.map { case (f, _, typed) => f.outName -> typed }.toMap
     def resolve(name: String): Column =
       typedByName.getOrElse(name.toLowerCase,
         throw new IllegalArgumentException(
@@ -108,11 +112,8 @@ object ValidateAndSplit {
       ErrCol,
       filter(array(errExprs ++ ruleErrs: _*), e => e.isNotNull))
 
-    val validCols: Seq[Column] = perField.map {
-      case (f, None)     => lit(null).cast(f.dataType).as(f.outName)
-      case (f, Some(in)) =>
-        castedOrNull(col(quoted(in)), df.schema(in).dataType, f).as(f.outName)
-    }
+    val validCols: Seq[Column] =
+      perField.map { case (f, _, typed) => typed.as(f.outName) }
 
     val valid = withErrs
       .where(size(col(ErrCol)) === 0)

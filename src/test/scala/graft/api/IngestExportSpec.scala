@@ -548,6 +548,21 @@ class IngestExportSpec extends AnyFunSuite {
     assert(back.map(_.getString(2)).toSeq === Seq("o0", "o1", "o2", "o3"))
   }
 
+  test("export parquet closes its part-lookup and cleanup directory streams") {
+    val fds = new java.io.File("/proc/self/fd")
+    assume(fds.isDirectory, "needs /proc/self/fd")
+    spark.range(2).createOrReplaceTempView("fd_src")
+    val dir = Files.createTempDirectory("exp_fds_")
+    val conf = ExportConfig("tester", "SELECT id FROM fd_src", dir.toString,
+      "res.parquet", format = ExportFormat.Parquet,
+      logTable = TableRef("t", "est", "expfds"))
+    assert(Export.execute(conf).ok) // warm-up: the log table and its reader
+    val n = 12
+    val before = fds.list().length
+    (1 to n).foreach(_ => assert(Export.execute(conf).rows === 2))
+    assert(fds.list().length - before < n)
+  }
+
   test("export csv: RFC-4180 escaping survives a Spark-reader roundtrip") {
     import spark.implicits._
     Seq((1L, Some("plain"), "a"), (2L, Some("has,comma"), "b"),

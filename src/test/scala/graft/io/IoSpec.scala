@@ -41,6 +41,18 @@ class IoSpec extends AnyFunSuite {
     }
   }
 
+  test("LocalStore.list closes its directory stream (no fd per call)") {
+    val fds = new java.io.File("/proc/self/fd")
+    assume(fds.isDirectory, "needs /proc/self/fd")
+    val dir = Files.createTempDirectory("store_fds_").toString
+    val store = new LocalStore
+    store.putOverwrite(dir, "a.csv", _.write("x".getBytes))
+    val n = 100
+    val before = fds.list().length
+    (1 to n).foreach(_ => assert(store.list(dir).map(_.name) === Seq("a.csv")))
+    assert(fds.list().length - before < n)
+  }
+
   test("FileSelect: re.match anchoring and latest-by-mtime") {
     val items = Seq(
       ObjectStat("sales_2024.csv", 100, 1),

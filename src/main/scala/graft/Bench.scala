@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   * (sized to fit the driver's ~2 KB output-tail capture window — the
   * r10/r11 records outgrew it and parsed as null), preceded by a full
   * detail line (per-query disk + CPU stamps, task skew, contention reruns)
-  * that is also written to BENCH_DETAIL.json. Results are fully
+  * that a full default-set run also writes to BENCH_DETAIL.json (a
+  * SPARK_GRAFT_BENCH_ONLY subset only prints it). Results are fully
   * materialized through the noop sink (a bare .count() lets Spark skip
   * column materialization for scan-shaped queries).
   */
@@ -464,11 +465,14 @@ object Bench {
     val failedJson = if (failed.isEmpty) ""
       else failed.map("\"" + _ + "\"").mkString(",\"failed\":[", ",", "]")
     val detail = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"disk_mbps":$mbpsR,"cpu_ms":$cpuMsR,"quiesced":$quiesced,"quiesce_waits":$quiesceWaits$skewJson$stampJson$cpuJson$rerunJson$regressJson$failedJson,"sf":"$sfDir"}"""
-    try java.nio.file.Files.write(
-      java.nio.file.Paths.get("BENCH_DETAIL.json"),
-      (detail + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] detail sidecar write failed: $e") }
+    // Only a full default-set run is a record: a SPARK_GRAFT_BENCH_ONLY
+    // subset prints its detail line but leaves the file alone.
+    if (only.isEmpty)
+      try java.nio.file.Files.write(
+        java.nio.file.Paths.get("BENCH_DETAIL.json"),
+        (detail + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] detail sidecar write failed: $e") }
     println(detail)
     // The compact official line carries only the SLOWEST 12 queries:
     // the full 33-query map is ~1.5 KB against the driver's ~2 KB

@@ -9,6 +9,12 @@ import org.apache.spark.sql.SparkSession
   * use when the full Bench protocol (warm-up, min-of-three, disk floor)
   * is not the question.
   *
+  * A `[probe]` wall is a cold-JVM first run with no warm-up, so on small
+  * inputs it is mostly class loading and JIT: at sf0.01 on 4 cores,
+  * `d2_dedup_minhash` reads wall=7.62 s here against 0.74 s from
+  * [[StageProfile]] after one warm-up pass. Read it for rows, skew and
+  * "does it run"; time with [[StageProfile]] or [[Bench]].
+  *
   * [[session]] is also the local session, with a [[Trace]] attached,
   * that [[StageProfile]], [[Plans]] and [[GenScale]] run on, and
   * [[timed]] the timer `StageProfile` reads its wall from.

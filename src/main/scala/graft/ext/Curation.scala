@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * 100 TB pretraining run executes, composed from the individually
   * gate-proven stages:
   *
-  *   1. quality filter ([[TextAnalysis.gopherQuality]] — narrow
-  *      projection, junk never reaches the signature passes);
+  *   1. quality filter (the [[TextAnalysis.gopherQuality]] rules as one
+  *      codegen'd kernel call per row in a narrow filter — junk never
+  *      reaches the signature passes);
   *   2. exact dedup (min-id representative per text — one partial-agg
   *      shuffle of (text → min id), semi-join back);
   *   2b. OPTIONAL fuzzy near-dup ([[Dedup.minHashPairs]] LSH pairs →
@@ -86,26 +87,19 @@ object Curation {
       minWords: Long = 50L, minStopHits: Long = 2L,
       gramN: Int = 8,
       nearDup: Option[Dedup.MinHashConfig] = None): DataFrame = {
-    // 1. quality — keep rows whose metrics clear the (parametrized)
-    // Gopher rules, as an INLINE narrow filter (the [[curateStream]]
-    // shape): the previous gopherQuality + id-semi-join formulation
-    // cost two exchanges AND evaluated the metric expressions twice
-    // per document (once in each join subtree). With unique ids —
-    // every caller's contract, and what the gates' oracles replay —
-    // the per-row verdict is the same relation. r17 measurement: each
-    // exchange is an AQE stage-job plus a 50-150 ms driver gap, and
-    // the composed pipelines are gap-bound, so exchange count is the
-    // cost that matters here (guide §2.4).
-    val metrics = TextAnalysis.gopherMetricCols(col(text))
-    metrics.map(_._1).foreach(n =>
-      require(!docs.columns.exists(_.equalsIgnoreCase(n)),
-        s"curate: input already has a column named '$n'"))
-    val flagged = metrics.foldLeft(docs) {
-      case (df, (n, c)) => df.withColumn(n, c)
-    }
-    val afterQuality = flagged
-      .where(TextAnalysis.gopherVerdict(minWords, 100000L, minStopHits))
-      .drop(metrics.map(_._1): _*)
+    // 1. quality — keep rows that clear the (parametrized) Gopher
+    // rules, as an INLINE narrow filter (the [[curateStream]] shape):
+    // the previous gopherQuality + id-semi-join formulation cost two
+    // exchanges AND evaluated the metrics twice per document (once in
+    // each join subtree). With unique ids — every caller's contract, and
+    // what the gates' oracles replay — the per-row verdict is the same
+    // relation. r17 measurement: each exchange is an AQE stage-job plus
+    // a 50-150 ms driver gap, and the composed pipelines are gap-bound,
+    // so exchange count is the cost that matters here (guide §2.4). The
+    // predicate is one fused kernel call per row, so the filter stays
+    // inside whole-stage codegen with the scan.
+    val afterQuality = docs.where(
+      TextAnalysis.gopherKeep(col(text), minWords, minStopHits))
 
     // 2. exact dedup — first-seen (min id) representative per text, as
     // ONE partial-aggregated exchange: min over a struct whose first
@@ -322,8 +316,8 @@ object Curation {
     * the reference's poll-a-folder ingest loop, made continuous, that
     * admits only clean novel documents:
     *
-    *   - quality: the Gopher metrics ride inline as a stateless narrow
-    *     projection (computed, tested, dropped — nothing buffered);
+    *   - quality: the Gopher verdict rides inline as a stateless narrow
+    *     filter (one fused kernel call per row — nothing buffered);
     *   - dedup: `dropDuplicates` on the content fingerprint — the
     *     state store holds one 8-byte key per distinct document ever
     *     seen, so re-deliveries (the same file polled twice, a
@@ -342,16 +336,10 @@ object Curation {
       benchmark: DataFrame, benchText: String,
       minWords: Long = 50L, minStopHits: Long = 2L,
       gramN: Int = 8): DataFrame = {
-    val metrics = TextAnalysis.gopherMetricCols(col(text))
-    (metrics.map(_._1) :+ "__fp").foreach(n =>
-      require(!src.columns.exists(_.equalsIgnoreCase(n)),
-        s"curateStream: input already has a column named '$n'"))
-    val flagged = metrics.foldLeft(src) {
-      case (df, (n, c)) => df.withColumn(n, c)
-    }
-    val quality = flagged
-      .where(TextAnalysis.gopherVerdict(minWords, 100000L, minStopHits))
-      .drop(metrics.map(_._1): _*)
+    require(!src.columns.exists(_.equalsIgnoreCase("__fp")),
+      "curateStream: input already has a column named '__fp'")
+    val quality = src.where(
+      TextAnalysis.gopherKeep(col(text), minWords, minStopHits))
     val deduped = quality
       .withColumn("__fp",
         graft.functions.GraftFunctions.fingerprint(col(text)))
@@ -556,15 +544,8 @@ object Curation {
       .transform(Scale.materialize)
     // inline Gopher filter (the [[curate]] quality shape): one narrow
     // filter instead of gopherQuality + id-semi-join
-    val qMetrics = TextAnalysis.gopherMetricCols(col(bodyCol))
-    qMetrics.map(_._1).foreach(n =>
-      require(!capped.columns.exists(_.equalsIgnoreCase(n)),
-        s"curateCrawl: input already has a column named '$n'"))
-    val afterQ = qMetrics.foldLeft(capped) {
-        case (df, (n, c)) => df.withColumn(n, c)
-      }
-      .where(TextAnalysis.gopherVerdict(minWords, 100000L, minStopHits))
-      .drop(qMetrics.map(_._1): _*)
+    val afterQ = capped.where(
+      TextAnalysis.gopherKeep(col(bodyCol), minWords, minStopHits))
     val sharded = Packing.shardByTokens(afterQ, id,
       TextAnalysis.tokenCount(col(bodyCol)), shardTokens,
       carry = Seq("host"))

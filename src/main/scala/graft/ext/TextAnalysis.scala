@@ -81,56 +81,27 @@ object TextAnalysis {
     *   - contains at least 2 of the 8 Gopher stop words
     *
     * Output: one row per doc with every rule's inputs (so a failing doc
-    * is diagnosable) plus the `is_quality` verdict. One narrow
+    * is diagnosable) plus the `is_quality` verdict, all read from ONE
+    * evaluation of the fused [[graft.functions.GopherQuality]] kernel (a
+    * single codegen'd pass over the document's bytes). One narrow
     * projection — no shuffle, no join; run it BEFORE dedup so junk
     * never enters the signature passes. */
-  /** The Gopher metric expressions, named — shared by [[gopherQuality]]
-    * (batch metrics report) and [[Curation.curateStream]] (inline
-    * stateless filter on a stream). */
-  private[ext] def gopherMetricCols(t: Column): Seq[(String, Column)] = {
-    val words = filter(split(t, "\\s+"), w => length(w) > 0)
-    val lines = filter(split(t, "\n"), l => length(ltrim(l)) > 0)
-    val stops = Seq("the", "be", "to", "of", "and", "that", "have", "with")
-    Seq(
-      "n_words" -> size(words).cast(LongType),
-      "sum_word_len" ->
-        length(regexp_replace(t, "\\s", "")).cast(LongType),
-      "n_symbols" ->
-        ((length(t) - length(regexp_replace(t, "#", ""))) +
-          (length(t) - length(regexp_replace(t, "\\.\\.\\.", ""))) / 3)
-          .cast(LongType),
-      "n_lines" -> size(lines).cast(LongType),
-      "n_bullet_lines" -> size(filter(lines, l =>
-        ltrim(l).startsWith("-") || ltrim(l).startsWith("*") ||
-          ltrim(l).startsWith("•"))).cast(LongType),
-      "n_ellipsis_lines" ->
-        size(filter(lines, l => rtrim(l).endsWith("..."))).cast(LongType),
-      "n_alpha_words" ->
-        size(filter(words, w => w.rlike("[A-Za-z]"))).cast(LongType),
-      "n_stop_hits" -> size(array_intersect(
-        transform(words, lower _), lit(stops.toArray))).cast(LongType))
-  }
-
-  /** The Gopher verdict over the named metric columns. */
-  private[ext] def gopherVerdict(minWords: Long, maxWords: Long,
-      minStopHits: Long): Column =
-    col("n_words").between(minWords, maxWords) &&
-      col("sum_word_len") >= col("n_words") * 3 &&
-      col("sum_word_len") <= col("n_words") * 10 &&
-      col("n_symbols") * 10 <= col("n_words") &&
-      col("n_bullet_lines") * 10 <= col("n_lines") * 9 &&
-      col("n_ellipsis_lines") * 10 <= col("n_lines") * 3 &&
-      col("n_alpha_words") * 10 >= col("n_words") * 8 &&
-      col("n_stop_hits") >= minStopHits
-
   def gopherQuality(df: DataFrame, text: String, id: String,
       minWords: Long = 50L, maxWords: Long = 100000L,
-      minStopHits: Long = 2L): DataFrame = {
-    val out = df.select(col(id) +:
-      gopherMetricCols(col(text)).map { case (n, c) => c.as(n) }: _*)
-    out.withColumn("is_quality",
-      gopherVerdict(minWords, maxWords, minStopHits))
-  }
+      minStopHits: Long = 2L): DataFrame =
+    df.select(col(id), GraftFunctions.gopherQuality(col(text), minWords,
+        maxWords, minStopHits).as("__gopher"))
+      .select(col(id), col("__gopher.*"))
+
+  /** The Gopher verdict (word ceiling 100000) as a row predicate — the
+    * kernel's `is_quality`, one evaluation per row, inside whole-stage
+    * codegen. The inline quality filter of [[Curation.curateKept]],
+    * [[Curation.curateStream]] and [[Curation.curateCrawl]]; null text
+    * is dropped. */
+  private[ext] def gopherKeep(text: Column, minWords: Long,
+      minStopHits: Long): Column =
+    GraftFunctions.gopherQuality(text, minWords, 100000L, minStopHits)
+      .getField("is_quality")
 
   /** C4-style page cleaning (Raffel et al. 2020, the published heuristics
     * behind the Colossal Clean Crawled Corpus; cf. reference

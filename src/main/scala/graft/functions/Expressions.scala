@@ -1332,6 +1332,197 @@ object SortedIdPairs {
   }
 }
 
+/** The eight Gopher quality metrics (Rae et al. 2021, table A1) of one
+  * document and their verdict, in ONE pass over its UTF-8 bytes. The
+  * SQL form this replaces split the text twelve times, ran four
+  * `regexp_replace`s, interpreted `filter`/`transform` lambdas and a
+  * per-word `rlike`, and kept the quality `Filter` out of whole-stage
+  * codegen. Every metric is bit-identical to that form for valid UTF-8
+  * (pinned by a differential spec against it):
+  *
+  *   - words are maximal runs of non-`\s` characters, where `\s` is
+  *     Java's six ASCII whitespace characters;
+  *   - `sum_word_len` is the non-whitespace character count, characters
+  *     counted as `UTF8String.numChars` counts them;
+  *   - `n_symbols` is `#` count plus `...` count, left to right without
+  *     overlap;
+  *   - lines split on `\n`; a line counts if it has a character other
+  *     than `' '` (`ltrim`/`rtrim` strip only `' '`), is a bullet line if
+  *     its first such character is `-`, `*` or `•`, an ellipsis line if
+  *     its last one closes a `...`;
+  *   - an alpha word holds an ASCII letter;
+  *   - stop hits count DISTINCT words whose Spark `lower` is one of the
+  *     eight stop words (non-ASCII words go through `lower`'s own case
+  *     mapping).
+  *
+  * Output: a struct of the eight metrics and `is_quality` (every ratio
+  * threshold a cross-multiplication, never a float division); null for
+  * null text. */
+case class GopherQuality(child: Expression, minWords: Long, maxWords: Long,
+    minStopHits: Long) extends UnaryExpression {
+
+  override def dataType: DataType = GopherQuality.dataType
+
+  override def checkInputDataTypes() = {
+    if (child.dataType == StringType)
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"gopher_quality expects STRING, got ${child.dataType.sql}")
+  }
+
+  // The case mapping Spark's `lower` uses for non-ASCII words, read from
+  // the same conf at the same point.
+  private lazy val useICU: Boolean = org.apache.spark.sql.internal.SQLConf.get
+    .getConf(org.apache.spark.sql.internal.SQLConf.ICU_CASE_MAPPINGS_ENABLED)
+
+  override def nullSafeEval(input: Any): Any =
+    GopherQuality.compute(input.asInstanceOf[UTF8String], minWords, maxWords,
+      minStopHits, useICU)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.GopherQuality.compute($c, ${minWords}L, " +
+        s"${maxWords}L, ${minStopHits}L, $useICU);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object GopherQuality {
+  val dataType: StructType = StructType(
+    Seq("n_words", "sum_word_len", "n_symbols", "n_lines", "n_bullet_lines",
+      "n_ellipsis_lines", "n_alpha_words", "n_stop_hits")
+      .map(StructField(_, LongType, nullable = false)) :+
+      StructField("is_quality", BooleanType, nullable = false))
+
+  private val stops: Array[UTF8String] =
+    Array("the", "be", "to", "of", "and", "that", "have", "with")
+      .map(UTF8String.fromString)
+
+  /** Bit k set iff the word's bytes, ASCII-lowercased, are stop word k. */
+  private def asciiStopBit(base: AnyRef, off: Long, len: Int): Int = {
+    var k = 0
+    while (k < stops.length) {
+      val sw = stops(k)
+      if (sw.numBytes == len) {
+        var j = 0
+        while (j < len && {
+            val b = org.apache.spark.unsafe.Platform.getByte(base, off + j)
+            (if (b >= 'A' && b <= 'Z') b + 32 else b) == sw.getByte(j)
+          }) j += 1
+        if (j == len) return 1 << k
+      }
+      k += 1
+    }
+    0
+  }
+
+  private def stopBit(lowered: UTF8String): Int = {
+    var k = 0
+    while (k < stops.length) {
+      if (stops(k) == lowered) return 1 << k
+      k += 1
+    }
+    0
+  }
+
+  private def isWs(b: Byte): Boolean = b == ' ' || (b >= 9 && b <= 13)
+
+  /** Shared by eval and generated code. */
+  def compute(s: UTF8String, minWords: Long, maxWords: Long, minStopHits: Long,
+      useICU: Boolean): InternalRow = {
+    import org.apache.spark.unsafe.Platform.getByte
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    var nChars, nWs, nWords, nAlpha, nHash, nDots3 = 0L
+    var nLines, nBullet, nEll = 0L
+    var stopMask = 0
+    var inWord = false
+    var wStart = 0
+    var wAlpha = false
+    var wAscii = true
+    var dotRun = 0   // '.' run ending here, reset after each "..." match
+    var lineSeen = false
+    var lineDots = 0 // '.' run ending at the line's last non-' ' character
+    var lineGap = false // a ' ' since that character
+    // One loop step past the last byte reads a virtual '\n' that closes
+    // the last word and line (no closure: captured vars would be boxed).
+    var i = 0
+    var more = true
+    while (more) {
+      more = i < n
+      val b = if (more) getByte(base, off + i) else '\n'.toByte
+      if (more) nChars += 1
+      if (isWs(b)) {
+        if (more) nWs += 1
+        if (inWord) {
+          inWord = false
+          if (wAlpha) nAlpha += 1
+          val len = math.min(i, n) - wStart
+          if (wAscii) {
+            if (len >= 2 && len <= 4) stopMask |= asciiStopBit(base, off + wStart, len)
+          } else stopMask |= stopBit(
+            org.apache.spark.sql.catalyst.util.CollationSupport.Lower.exec(
+              UTF8String.fromAddress(base, off + wStart, len),
+              org.apache.spark.sql.catalyst.util.CollationFactory
+                .UTF8_BINARY_COLLATION_ID, useICU))
+        }
+      } else {
+        if (!inWord) {
+          inWord = true
+          wStart = i
+          wAlpha = false
+          wAscii = true
+          nWords += 1
+        }
+        if (b < 0) wAscii = false
+        else if ((b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z')) wAlpha = true
+      }
+      if (b == '#') nHash += 1
+      if (b == '.') {
+        dotRun += 1
+        if (dotRun == 3) { nDots3 += 1; dotRun = 0 }
+      } else dotRun = 0
+      if (b == '\n') {
+        if (lineSeen) {
+          nLines += 1
+          if (lineDots >= 3) nEll += 1
+        }
+        lineSeen = false
+        lineDots = 0
+        lineGap = false
+      } else if (b == ' ') lineGap = true
+      else {
+        if (!lineSeen) {
+          lineSeen = true
+          if (b == '-' || b == '*' ||
+              (b == 0xE2.toByte && i + 2 < n &&
+                getByte(base, off + i + 1) == 0x80.toByte &&
+                getByte(base, off + i + 2) == 0xA2.toByte)) nBullet += 1
+        }
+        lineDots = if (b != '.') 0 else if (lineGap) 1 else lineDots + 1
+        lineGap = false
+      }
+      i += UTF8String.numBytesForFirstByte(b)
+    }
+
+    val sumLen = nChars - nWs
+    val nSym = nHash + nDots3
+    val nStop = Integer.bitCount(stopMask).toLong
+    val ok = nWords >= minWords && nWords <= maxWords &&
+      sumLen >= nWords * 3 && sumLen <= nWords * 10 &&
+      nSym * 10 <= nWords &&
+      nBullet * 10 <= nLines * 9 &&
+      nEll * 10 <= nLines * 3 &&
+      nAlpha * 10 >= nWords * 8 &&
+      nStop >= minStopHits
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
+      nWords, sumLen, nSym, nLines, nBullet, nEll, nAlpha, nStop, ok))
+  }
+}
+
 /** [[SortedIntersectCount]] for ASCENDING-sorted long arrays — the
   * allocation-free two-pointer merge over 8-byte fingerprints. Inputs
   * must be duplicate-free or common duplicates count multiply.
@@ -3694,6 +3885,9 @@ object GraftFunctions {
   def bandHashes(c: Column, bands: Int, rowsPerBand: Int): Column =
     column(BandHashes(expr(c), bands, rowsPerBand))
   def sortedIdPairs(c: Column): Column = column(SortedIdPairs(expr(c)))
+  def gopherQuality(c: Column, minWords: Long, maxWords: Long,
+      minStopHits: Long): Column =
+    column(GopherQuality(expr(c), minWords, maxWords, minStopHits))
   def sortedLongIntersectCount(a: Column, b: Column): Column =
     column(SortedLongIntersectCount(expr(a), expr(b)))
   def tokenNGrams(c: Column, n: Int): Column = column(TokenNGrams(expr(c), n))

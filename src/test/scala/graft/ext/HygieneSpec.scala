@@ -289,13 +289,23 @@ class HygieneSpec extends AnyFunSuite {
       "passes, metrics are exact") {
     import graft.ext.TextAnalysis
     val goodWords = (1 to 60).map(i => s"word$i").mkString(" ")
+    // Five lines: tab and CR inside words' whitespace, '-' and '•'
+    // bullets after leading spaces, a "..." line with trailing spaces,
+    // '#', THE/the/and as stop words, and a non-ASCII word.
+    val handCounted =
+      "THE cat\tsat on the mat.\r\n" +
+        "  - first item\n" +
+        "   • second über item\n" +
+        "and so it went...   \n" +
+        "#tag 42"
     val good = s"the cat sat of that mat and $goodWords"
     val df = Seq(
       (1L, good),                                    // passes everything
       (2L, "the of " + (1 to 10).map(_ => "word").mkString(" ")), // <50 words
       (3L, good + " " + Seq.fill(60)("#").mkString(" ")), // symbol flood + short words
       (4L, good.split(" ").map(w => s"- $w\n").mkString), // all bullet lines
-      (5L, good + " " + (1 to 70).map(_ => "12345").mkString(" ")) // <80% alpha
+      (5L, good + " " + (1 to 70).map(_ => "12345").mkString(" ")), // <80% alpha
+      (6L, handCounted)
     ).toDF("doc_id", "text")
     val got = TextAnalysis.gopherQuality(df, "text", "doc_id")
       .collect().map(r => r.getLong(0) -> r.getBoolean(9)).toMap
@@ -304,11 +314,24 @@ class HygieneSpec extends AnyFunSuite {
     assert(!got(3L), "symbol-to-word ratio")
     assert(!got(4L), "bullet-line ratio")
     assert(!got(5L), "alpha-word ratio")
-    // metric spot-check on doc 1: 67 words, 2 distinct stop hits... more.
+    // metric spot-check on doc 1: 67 words, 4 distinct stop hits
     val m = TextAnalysis.gopherQuality(df, "text", "doc_id")
       .where(col("doc_id") === 1L).collect()(0)
     assert(m.getLong(1) === 67L)       // n_words
-    assert(m.getLong(8) >= 2L)         // n_stop_hits (the, of, that, and)
+    assert(m.getLong(8) === 4L)        // n_stop_hits (the, of, that, and)
+    val h = TextAnalysis.gopherQuality(df, "text", "doc_id")
+      .where(col("doc_id") === 6L).collect()(0)
+    val metrics = h.toSeq.slice(1, 9)
+    assert(metrics === Seq(
+      19L, // n_words: 6 + 3 + 4 + 4 + 2 per line
+      63L, // sum_word_len: 18 + 10 + 15 + 14 + 6 non-whitespace chars
+      2L,  // n_symbols: one '#', one "..."
+      5L,  // n_lines
+      2L,  // n_bullet_lines: "  - first", "   • second"
+      1L,  // n_ellipsis_lines: "went...   " (the CR line ends in '\r')
+      16L, // n_alpha_words: all but "-", "•", "42"
+      2L)) // n_stop_hits: the (THE, the), and
+    assert(!h.getBoolean(9), "19 words is under the 50-word floor")
   }
 
   test("pmiBigrams: exact integer score, collocation beats frequent-but-" +

@@ -2,6 +2,7 @@ package graft.ext
 
 import graft.TestSpark
 import graft.functions.GraftFunctions
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -136,6 +137,66 @@ class OptimizedInternalsSpec extends AnyFunSuite {
       .elementType.asInstanceOf[org.apache.spark.sql.types.StructType]
       .fieldNames.toSeq
     assert(fields === Seq("id_a", "id_b"))
+  }
+
+  test("gopherQuality kernel: all eight metrics and the verdict match " +
+      "the SQL form on adversarial text") {
+    // The fused kernel replaced the regex-split/lambda form at every
+    // quality filter; kept sets depend on each metric being EXACTLY
+    // equal, so pin all eight plus the verdict against that form over
+    // seeded random text built from the characters where the two could
+    // part: every Java \s (tab, CR, VT, FF), non-\s spaces (NBSP),
+    // '#', dot runs, bullets after leading spaces, non-ASCII letters
+    // whose case mapping is special (İ, the Kelvin sign), surrogate
+    // pairs and upper/mixed-case stop words.
+    val rnd = new scala.util.Random(20260419)
+    val words = Seq("the", "THE", "The", "of", "OF", "and", "AND", "that",
+      "tHaT", "be", "BE", "to", "have", "HAVE", "with", "WITH", "word",
+      "cat", "x", "ab", "a1", "12345", "İ", "İTHE", "\u212Aey", "caf\u00e9",
+      "\ud83d\ude00", "w\ud83d\ude00rd", "#", "##", "#tag", ".", "..",
+      "...", "....", "end...", "•", "-", "*", "-item", "•x")
+    val seps = Seq(" ", " ", " ", "  ", "\t", "\r", "\u000b", "\f", "\n",
+      "\n", "\r\n", " \n ", "\n  ", "\n- ", "\n  • ", "\n* ", "... \n",
+      "...  \n", "\u00a0", "")
+    def doc(): String = {
+      val prose = rnd.nextBoolean()
+      val n = if (prose) 20 + rnd.nextInt(60) else rnd.nextInt(25)
+      val sb = new StringBuilder
+      if (rnd.nextInt(4) == 0) sb ++= seps(rnd.nextInt(seps.size))
+      (0 until n).foreach { _ =>
+        sb ++= (if (prose && rnd.nextInt(3) > 0)
+          Seq("the", "of", "word", "cat", "with", "sat")(rnd.nextInt(6))
+        else words(rnd.nextInt(words.size)))
+        sb ++= (if (prose && rnd.nextInt(4) > 0) " "
+          else seps(rnd.nextInt(seps.size)))
+      }
+      sb.toString
+    }
+    val texts: Seq[String] = Seq(null, "", "   ", "\n\n", "...", "\n...  ",
+      " - a\n", "•") ++ Seq.fill(3000)(doc())
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("id", "text")
+    // gopherQuality's defaults, p8's pretraining thresholds, and a
+    // lenient set that lets random text pass and exercises the word
+    // ceiling.
+    for ((minW, maxW, minS) <- Seq((50L, 100000L, 2L), (30L, 100000L, 1L),
+        (2L, 60L, 0L))) {
+      def rows(f: DataFrame) = f.collect()
+        .map(r => r.getLong(0) -> r.toSeq.drop(1)).toMap
+      val fused = rows(TextAnalysis.gopherQuality(df, "text", "id",
+        minW, maxW, minS))
+      val sql = rows(GopherSqlForm.quality(df, "text", "id", minW, maxW, minS))
+      val diff = sql.keys.toSeq.sorted.filter(k => fused(k) != sql(k))
+      def shown(t: String) = Option(t).fold("null")(_.take(80).flatMap(c =>
+        if (c < ' ') "\\x" + c.toInt.toHexString else c.toString))
+      assert(diff.isEmpty, s"($minW,$maxW,$minS): ${diff.size} docs differ, " +
+        diff.take(3).map(k => s"'${shown(texts(k.toInt))}': " +
+          s"kernel ${fused(k)} sql ${sql(k)}").mkString("; "))
+      val verdicts = sql.values.map(_.last).toSet
+      assert(verdicts === Set(null, true, false),
+        s"($minW,$maxW,$minS): the corpus must reach every verdict")
+      assert(fused(0L).forall(_ == null), "null text yields null metrics")
+    }
   }
 
   test("bloom probe via broadcast blob: no false negatives, fp-bounded") {

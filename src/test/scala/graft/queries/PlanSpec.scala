@@ -1,9 +1,11 @@
 package graft.queries
 
 import graft.TestSpark
+import graft.functions.GopherQuality
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{RDDScanExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.{FilterExec, InputAdapter, RDDScanExec, SortExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.execution.joins.{HashJoin, SortMergeJoinExec}
@@ -514,6 +516,80 @@ class PlanSpec extends AnyFunSuite {
       recs, "id", "url", "body", maxPerHost = 10))
     assert(!s.contains("CartesianProduct"), s)
     assert(!s.contains("BroadcastNestedLoopJoin"), s)
+  }
+
+  /** Every filter in `p` whose condition calls the Gopher kernel, with
+    * whether it runs inside a whole-stage codegen stage. */
+  private def gopherFilters(p: SparkPlan, inStage: Boolean = false)
+      : Seq[(FilterExec, Boolean)] = p match {
+    case a: AdaptiveSparkPlanExec => gopherFilters(a.executedPlan)
+    case q: QueryStageExec => gopherFilters(q.plan)
+    case r: ReusedExchangeExec => gopherFilters(r.child)
+    case w: WholeStageCodegenExec => gopherFilters(w.child, inStage = true)
+    case i: InputAdapter => gopherFilters(i.child)
+    case f: FilterExec if f.condition.exists(_.isInstanceOf[GopherQuality]) =>
+      (f, inStage) +: gopherFilters(f.child, inStage)
+    case _ => p.children.flatMap(gopherFilters(_, inStage))
+  }
+
+  test("curation quality filters: one Gopher kernel call per row inside " +
+      "whole-stage codegen, no lambdas (curateKept, curateStream, " +
+      "curateCrawl); one call per row in the metrics report") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val docs = graft.Tables.documents(spark, sf)
+      .select(col("doc_id"), col("text"))
+    val bench = docs.where(col("doc_id") % 20 === 0).select(col("text"))
+    // Plans of every execution a run of `body`'s frame goes through: the
+    // eager materializations the operators cut, then the rest of the
+    // frame, run through the noop sink so adaptive stages are final.
+    def plansOf(body: => DataFrame): Seq[SparkPlan] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        def onSuccess(name: String,
+            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+          seen.add(qe.executedPlan)
+        def onFailure(name: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        body.write.format("noop").mode("overwrite").save()
+        org.apache.spark.sql.graftbridge.SessionBridge
+          .waitUntilEmpty(spark.sparkContext)
+      } finally spark.listenerManager.unregister(listener)
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq
+    }
+    val recs = (1L to 40L).map(i =>
+      (i, s"https://site${i % 3}.example.com/p/$i",
+        ("word " * 30) + "the end.")).toDF("doc_id", "url", "body")
+    val sites = Seq(
+      "curateKept" -> plansOf(graft.ext.Curation.curateKept(
+        docs, "text", "doc_id", bench, "text")),
+      "curateStream" -> plansOf(graft.ext.Curation.curateStream(
+        docs, "text", "doc_id", bench, "text")),
+      "curateCrawl" -> plansOf(graft.ext.Curation.curateCrawl(
+        recs, "doc_id", "url", "body", maxPerHost = 10)))
+    for ((site, plans) <- sites) {
+      val found = plans.flatMap(gopherFilters(_))
+      assert(found.size === 1,
+        s"$site: expected one quality filter\n${plans.mkString("\n")}")
+      val (f, inStage) = found.head
+      assert(inStage, s"$site: the quality filter runs outside codegen\n$f")
+      assert(f.condition.collect { case g: GopherQuality => g }.size === 1,
+        s"$site: the kernel must run once per row\n$f")
+      assert(!f.condition.exists(_.isInstanceOf[HigherOrderFunction]) &&
+        !f.toString.toLowerCase.contains("lambdafunction"),
+        s"$site: interpreted lambdas in the quality filter\n$f")
+    }
+    // the metrics report reads its nine columns from one kernel call
+    val report = graft.ext.TextAnalysis.gopherQuality(docs, "text", "doc_id")
+      .queryExecution.optimizedPlan
+    val calls = report.collect { case n => n.expressions }.flatten
+      .flatMap(_.collect { case g: GopherQuality => g })
+    assert(calls.size === 1, s"gopherQuality report\n$report")
   }
 
   test("whole-stage codegen covers the custom expressions (no CodegenFallback gap)") {

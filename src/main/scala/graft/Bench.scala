@@ -123,8 +123,19 @@ object Bench {
     (System.nanoTime() - t0) / 1e6
   }
 
-  /** Previous OFFICIAL record (the round driver's BENCH_r{N}.json in
-    * the working dir — `_insession` builder records excluded): per-query
+  /** The newest official record among `names` from a round before
+    * `curRound`. A round's official records are `BENCH_r{N}.json` and
+    * `BENCH_r{N}_closing.json`, and the closing one wins; `_baseline`,
+    * `_detail`, `_c8` and `_insession*` records are never official. */
+  private[graft] def officialRecord(names: Seq[String], curRound: Int): Option[String] = {
+    val Official = "BENCH_r(\\d+)(_closing)?\\.json".r
+    names.collect { case n @ Official(r, closing) if r.toInt < curRound =>
+      ((r.toInt, closing != null), n) }
+      .maxByOption(_._1).map(_._2)
+  }
+
+  /** Previous OFFICIAL record (the round driver's record in the working
+    * dir, picked by [[officialRecord]]): per-query
     * times and, when the captured tail kept them, per-query disk
     * stamps. The r14 lesson this feeds: 14 queries read 1.3-1.8x their
     * prior level on a uniformly-depressed-disk session and the
@@ -151,14 +162,9 @@ object Bench {
     val curRound = sys.env.get("SPARK_GRAFT_BENCH_ROUND")
       .flatMap(v => scala.util.Try(v.toInt).toOption)
       .getOrElse(Int.MaxValue)
-    val files = Option(new java.io.File(".").listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.matches("BENCH_r\\d+\\.json"))
-      .filter(f =>
-        "\\d+".r.findFirstIn(f.getName).get.toInt < curRound)
-    if (files.isEmpty) return empty
-    val newest = files.maxBy(f =>
-      "\\d+".r.findFirstIn(f.getName).get.toInt)
+    val newest = officialRecord(Option(new java.io.File(".").list())
+        .getOrElse(Array.empty[String]).toSeq, curRound)
+      .map(new java.io.File(_)).getOrElse(return empty)
     val txt = try new String(
         java.nio.file.Files.readAllBytes(newest.toPath),
         java.nio.charset.StandardCharsets.UTF_8)
@@ -187,11 +193,15 @@ object Bench {
     // the driver's tail keeps ~2 KB, so the official record often
     // carries only the slowest-12 map; the committed SAME-ROUND
     // in-session record (official protocol since r14) holds the full
-    // per-query map — fill the gaps from it, official values winning
+    // per-query map, and so does the record's own `_detail` sidecar
+    // (r18 ships `BENCH_r18_closing_detail.json`) — fill the gaps from
+    // them, official values winning
     val roundNum = "\\d+".r.findFirstIn(newest.getName).get
+    val detailName = newest.getName.stripSuffix(".json") + "_detail.json"
     val insessionFill = Option(new java.io.File(".").listFiles())
       .getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.matches(s"BENCH_r${roundNum}_insession\\w*\\.json"))
+      .filter(f => f.getName.matches(s"BENCH_r${roundNum}_insession\\w*\\.json") ||
+        f.getName == detailName)
       // deterministic merge order: listFiles order is unspecified, and
       // with several in-session records (r16 ships three) the LAST map
       // folded wins overlapping keys — sort by the NUMERIC suffix
@@ -300,6 +310,10 @@ object Bench {
     // ±25% noise. The official sf0.1 record keeps the default protocol.
     val runs = sys.env.get("SPARK_GRAFT_BENCH_RUNS").map(_.toInt).getOrElse(3)
     val warmup = sys.env.get("SPARK_GRAFT_BENCH_WARMUP").forall(_ != "0")
+    // A cold or single shot is not comparable with the previous official
+    // record's warm min-of-3: such a run neither reruns nor flags a query
+    // for reading slower than that record.
+    val comparable = runs > 1 && warmup
     def setSizing(name: String): Unit = spark.conf.set(
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
       initialFor(name).toString)
@@ -395,7 +409,7 @@ object Bench {
     val results = if (!retry) results0 else results0.map { case (name, t) =>
       val suspect = stamps(name) < 0.5 * refStamp || spreads(name) > 2.0 ||
         cpuStamps(name) > 2.0 * cpuRef ||
-        prevTimes.get(name).exists(pt => t > 1.5 * pt)
+        (comparable && prevTimes.get(name).exists(pt => t > 1.5 * pt))
       if (!suspect) name -> t
       else {
         val q = benchDefs.find(_.name == name).get
@@ -442,7 +456,7 @@ object Bench {
       .mkString(",\"contention_reruns\":{", ",", "}")
     // regressions surviving the clean-window rerun, vs the previous
     // official record — each with both rounds' per-query disk stamps
-    val regressions = results.flatMap { case (name, t) =>
+    val regressions = if (!comparable) Nil else results.flatMap { case (name, t) =>
       prevTimes.get(name).filter(pt => t > 1.5 * pt).map { pt =>
         def opt(m: Map[String, Double]) = m.get(name)
           .map(v => math.rint(v * 10) / 10).map(_.toString)
@@ -457,9 +471,14 @@ object Bench {
     }
     val regressJson =
       if (prevTimes.isEmpty) ""
+      else if (!comparable) ",\"prev_record\":\"" + prevName +
+        "\",\"prev_regressions_skipped\":\"runs=1 or warmup=0 is not " +
+        "comparable with the record's warm min-of-3\""
       else regressions.mkString(
         ",\"prev_record\":\"" + prevName + "\",\"prev_regressions\":{",
         ",", "}")
+    val nRegressionsJson =
+      if (comparable) s""","n_prev_regressions":${regressions.size}""" else ""
     val mbpsR = math.rint(mbps * 10) / 10
     val cpuMsR = math.rint(cpuMs * 10) / 10
     val failedJson = if (failed.isEmpty) ""
@@ -482,7 +501,7 @@ object Bench {
     val qsSlow = results.sortBy(-_._2).take(12)
       .map { case (k, v) => "\"" + k + "\":" + round3(v) }
       .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsSlow,"n_queries":${results.size},"disk_mbps":$mbpsR,"cpu_ms":$cpuMsR,"quiesced":$quiesced,"n_reruns":${reruns.size},"n_prev_regressions":${regressions.size},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsSlow,"n_queries":${results.size},"disk_mbps":$mbpsR,"cpu_ms":$cpuMsR,"quiesced":$quiesced,"n_reruns":${reruns.size}$nRegressionsJson,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -66,15 +66,19 @@ final case class ExportReport(rows: Long, errors: Seq[String]) {
   * rows stream through `toLocalIterator` instead of a full `toPandas()`
   * materialization (box_export.py:37) — the driver holds one partition,
   * not the result set.
+  *
+  * A call's audit rows (the manifest row, then the exported or failed
+  * row) are held in one [[AuditLog.Buffer]] and flushed once when the
+  * call ends, as one driver-written file with no Spark job; a failed
+  * flush adds `audit log failed` to the report's errors.
   */
 object Export {
 
   def execute(conf: ExportConfig, store: ObjectStore = new LocalStore)(
       implicit spark: SparkSession): ExportReport = {
     val errors = ListBuffer.empty[String]
-    def log(action: String, info: String): Unit =
-      try AuditLog.logTask(spark, conf.logTable, conf.taskOwner, action, info)
-      catch { case NonFatal(e) => errors += s"audit log failed: ${e.getMessage}" }
+    val audit = new AuditLog.Buffer(spark, conf.logTable, conf.taskOwner)
+    def log(action: String, info: String): Unit = audit.add(action, info)
 
     var rows = 0L
     try {
@@ -185,7 +189,7 @@ object Export {
     } catch { case NonFatal(e) =>
       errors += s"export failed: ${e.getMessage}"
       log("Export failed", e.getMessage)
-    }
+    } finally errors ++= audit.flush()
     ExportReport(rows, errors.toSeq)
   }
 

@@ -74,10 +74,11 @@ final case class IngestReport(
   * are not attempted, and counts of the appends that landed stay in the
   * report. A table whose union append landed is not written again.
   *
-  * Audit rows are buffered and written in one append after each batch's
-  * appends and once when the run ends; `File processed` rows are logged
-  * after their batch's appends. A run that dies keeps every audit row
-  * logged before the end of the last batch it wrote.
+  * Audit rows are buffered and flushed after each batch's appends and
+  * once when the run ends; a flush is a driver-written file with no Spark
+  * job, and its rows are visible when it returns. `File processed` rows
+  * are logged after their batch's appends. A run that dies keeps every
+  * audit row logged before the end of the last batch it wrote.
   */
 object Ingest {
 
@@ -104,13 +105,6 @@ object Ingest {
 
     val audit = new AuditLog.Buffer(spark, conf.table, conf.taskOwner)
     def log(action: String, info: String): Unit = audit.add(action, info)
-    def flushAudit(): Unit = {
-      val held = audit.size
-      try audit.flush()
-      catch { case NonFatal(e) =>
-        errors ++= Seq.fill(held)(s"audit log failed: ${e.getMessage}")
-      }
-    }
 
     // One batch fills the cores once: every file is at least one write task.
     val batchSize = spark.sparkContext.defaultParallelism
@@ -148,7 +142,7 @@ object Ingest {
         live.foreach { l => processed += l.name; log("File processed", l.name) }
       } finally {
         leaves.foreach(_.raw.unpersist())
-        flushAudit()
+        errors ++= audit.flush()
       }
     }
 
@@ -256,7 +250,7 @@ object Ingest {
       log("Ingest failed", e.getMessage) // E1: failure is log-only
     } finally {
       batch.foreach(_.raw.unpersist()) // only left by a fatal error
-      flushAudit()
+      errors ++= audit.flush()
       if (tmp != null) try {
         val walk = Files.walk(tmp)
         try walk.sorted(java.util.Comparator.reverseOrder[Path]())

@@ -61,11 +61,8 @@ object TableSink {
     * lets callers create unpartitioned targets up front — O22). The
     * database is created only with the table: an existing table implies
     * its database. */
-  def append(df: DataFrame, ref: TableRef): Unit =
-    appendStamped(df.withColumn(ProcessDtCol, processDt), ref)
-
-  /** [[append]] of a frame that already carries its `process_dt`. */
-  private[sink] def appendStamped(stamped: DataFrame, ref: TableRef): Unit = {
+  def append(df: DataFrame, ref: TableRef): Unit = {
+    val stamped = df.withColumn(ProcessDtCol, processDt)
     val spark = stamped.sparkSession
     val exists = spark.catalog.tableExists(ref.qualified)
     if (!exists) ensureDatabase(spark, ref)

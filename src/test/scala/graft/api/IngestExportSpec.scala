@@ -130,22 +130,13 @@ class IngestExportSpec extends AnyFunSuite {
       === ((Seq("data_1.csv"), 0L, 0L)))
   }
 
-  test("ingest job budget: each file runs only its read, append and audit " +
-      "jobs; audit rows keep their call order") {
+  /** `body`'s result and the call site of every job it starts: its SQL
+    * execution's description (jobs run on a pool thread carry no user
+    * frame in their stages'), else its result stage's name. */
+  private def jobSites[T](body: => T): (T, Seq[String]) = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
     import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-    val dir = Files.createTempDirectory("ing_budget_")
-    Files.writeString(dir.resolve("data_1.csv"),
-      "id,amount,note\n1,2.5,ok\n,3.0,missing-id\n2,1.0,ok\n")
-    Files.writeString(dir.resolve("data_2.csv"),
-      "id,amount,note\n3,1.0,ok\nx,1.0,bad-id\n")
-    val ref = freshRef("budget")
-    val conf = IngestConfig("tester", ref, dir.toString, "data_.*\\.csv",
-      metadata = Some(meta), justCopy = false)
     val sc = spark.sparkContext
-    // The call site of every job the run starts: its SQL execution's
-    // (jobs run on a pool thread carry no user frame in their stages'),
-    // else its result stage's.
     val execSites = scala.collection.concurrent.TrieMap.empty[Long, String]
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Option[Long])]()
     val listener = new SparkListener {
@@ -158,20 +149,32 @@ class IngestExportSpec extends AnyFunSuite {
           .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)))
     }
     sc.addSparkListener(listener)
-    val first = try {
-      val r = Ingest.execute(conf)
+    val result = try {
+      val r = body
       org.apache.spark.sql.graftbridge.SessionBridge.waitUntilEmpty(sc)
       r
     } finally sc.removeSparkListener(listener)
+    (result, jobs.asScala.toSeq.map { case (stage, exec) =>
+      exec.flatMap(execSites.get).getOrElse(stage) })
+  }
+
+  test("ingest job budget: each file runs only its read, append and audit " +
+      "jobs; audit rows keep their call order") {
+    val dir = Files.createTempDirectory("ing_budget_")
+    Files.writeString(dir.resolve("data_1.csv"),
+      "id,amount,note\n1,2.5,ok\n,3.0,missing-id\n2,1.0,ok\n")
+    Files.writeString(dir.resolve("data_2.csv"),
+      "id,amount,note\n3,1.0,ok\nx,1.0,bad-id\n")
+    val ref = freshRef("budget")
+    val conf = IngestConfig("tester", ref, dir.toString, "data_.*\\.csv",
+      metadata = Some(meta), justCopy = false)
+    val (first, sites) = jobSites(Ingest.execute(conf))
     assert(first.ok, first.errors.mkString("; "))
     assert((first.validRows, first.invalidRows) === ((3L, 2L)))
-    val sites = jobs.asScala.toSeq.map { case (stage, exec) =>
-      exec.flatMap(execSites.get).getOrElse(stage) }
     assert(!sites.exists(_.startsWith("count")), sites.mkString("; "))
     // 2 files x (header + inference read), then one batch: the main
-    // append, the _error append and the batch's audit flush, then the
-    // final audit flush.
-    assert(sites.size <= 8, sites.mkString("; "))
+    // append and the _error append. The audit flushes run no job.
+    assert(sites.size <= 6, sites.mkString("; "))
 
     val log = s"${ref.database}.box_ingestion_log"
     assert(spark.table(log).orderBy("process_dt").select("job_action")
@@ -670,5 +673,23 @@ class IngestExportSpec extends AnyFunSuite {
       Files.createTempDirectory("expf_").toString, "x.xlsx",
       logTable = TableRef("t", "est", "expf")))
     assert(!r.ok && r.errors.exists(_.contains("export failed")))
+  }
+
+  test("export job budget: a csv export runs no saveAsTable job, and its " +
+      "manifest and exported rows land in one audit file") {
+    import spark.implicits._
+    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s").createOrReplaceTempView("budget_src")
+    val ref = TableRef("t", "est_budget", "x")
+    spark.sql(s"DROP TABLE IF EXISTS ${ref.database}.box_ingestion_log")
+    val dir = Files.createTempDirectory("exp_budget_")
+    val (r, sites) = jobSites(Export.execute(ExportConfig(
+      "tester", "SELECT id, s FROM budget_src ORDER BY id", dir.toString, "res.csv",
+      format = ExportFormat.Csv, manifest = true, logTable = ref)))
+    assert(r.ok && r.rows === 3, r.errors.mkString("; "))
+    assert(sites.nonEmpty && !sites.exists(_.contains("saveAsTable")), sites.mkString("; "))
+    val log = spark.table(s"${ref.database}.box_ingestion_log")
+    assert(log.orderBy("process_dt").select("job_action").collect().map(_.getString(0)).toSeq
+      === Seq("Exported manifest", "Exported file"))
+    assert(log.inputFiles.length === 1)
   }
 }

@@ -30,8 +30,9 @@ object ExportFormat {
   * box_export.py:73-74).
   *
   * Extensions beyond the reference surface:
-  *  - `codec`: "gzip" | "deflate" compresses Csv/JsonLines output
-  *    streams (JDK codecs; name the file *.gz / *.zz yourself). Ignored
+  *  - `codec`: "gzip" | "deflate" | "zstd" compresses Csv/JsonLines
+  *    output streams (JDK codecs for gzip/deflate, zstd-jni for zstd;
+  *    name the file *.gz / *.zz / *.zst yourself). Ignored
   *    for Parquet/Orc (internally compressed) and Xlsx (a zip already).
   *  - `extraSheets`: additional (sheetName -> SQL) pairs for Xlsx —
   *    each query streams into its own worksheet after the main one

@@ -134,14 +134,6 @@ object Dedup {
         sequence(lit(0), greatest(length(t) - k, lit(0))),
         i => t.substr(i + 1, lit(k))))))
 
-  /** Sorted in-bucket pair expansion: (bucket key cols, ids ARRAY<BIGINT>)
-    * → one row per (id_a < id_b) pair. Grouping + expansion replaces the
-    * classic bucket SELF-JOIN: one scan and one shuffle instead of two
-    * scans (each recomputing signatures) and a join. Buckets larger than
-    * `maxBucket` are dropped — a bucket of B docs yields B²/2 pairs, so a
-    * flood of byte-identical docs would otherwise blow up any LSH plan;
-    * run exact dedup (`exactGroups`/`byFingerprint`) first, and count
-    * skipped buckets via the returned frame if auditing recall. */
   /** Keep only rows whose bucket holds 2..maxBucket members, via a
     * codegen'd count window over the bucket key. In any LSH scheme the
     * vast majority of buckets are singletons; dropping them BEFORE the
@@ -196,7 +188,38 @@ object Dedup {
     withBucket.join(keep, keyCols)
   }
 
-  /** `skewSafe = true` routes the 2..maxBucket filter through
+  /** Sorted in-bucket pair expansion, shared by every pair operator here:
+    * (bucket key cols, element cols) → one row per in-bucket pair, with
+    * columns `<e>_a`, `<e>_b` per element column e, a before b in sort
+    * order (the id column leads, so id_a <= id_b). A payload (signature,
+    * vector, set size) rides with its id, so the verify needs no join
+    * back. Grouping + expansion replaces the classic bucket SELF-JOIN:
+    * one scan and one shuffle instead of two scans (each recomputing
+    * signatures) and a join. The caller filters `kept` to hot buckets
+    * first ([[keepHotBuckets]] or [[keepHotBucketsSkewSafe]]): a bucket
+    * of B docs yields B²/2 pairs, so a flood of byte-identical docs would
+    * otherwise blow up any LSH plan; run exact dedup
+    * (`exactGroups`/`byFingerprint`) first. The expansion is the
+    * codegen'd `SortedIdPairs` kernel, so the `Generate` stays inside
+    * whole-stage codegen; a lone element column is collected bare, so
+    * id-only buckets sort and pair plain longs. */
+  private def inBucketPairs(kept: DataFrame, keyCols: Seq[String],
+      elemCols: Seq[String]): DataFrame = {
+    val bare = elemCols.size == 1
+    val elem = if (bare) col(elemCols.head) else struct(elemCols.map(col): _*)
+    def side(s: String) = elemCols.map(e =>
+      col(if (bare) s"p.$s" else s"p.$s.$e").as(s"${e}_$s"))
+    kept
+      .groupBy(keyCols.map(col): _*)
+      .agg(sort_array(collect_list(elem)).as("es"))
+      .select(explode(GraftFunctions.sortedIdPairs(col("es"))).as("p"))
+      .select(side("a") ++ side("b"): _*)
+  }
+
+  /** Distinct (id_a, id_b) pairs of ids sharing a bucket of at most
+    * `maxBucket` members: [[inBucketPairs]] over the hot buckets.
+    *
+    * `skewSafe = true` routes the 2..maxBucket filter through
     * [[keepHotBucketsSkewSafe]] — required when keyCols are natural
     * (Zipfian) keys rather than uniform hashes.
     *
@@ -221,11 +244,6 @@ object Dedup {
   private[graft] def bucketPairs(withBucket: DataFrame, keyCols: Seq[String],
       idCol: String, maxBucket: Int,
       skewSafe: Boolean = false, expandWide: Boolean = false): DataFrame = {
-    // Sort INSIDE the agg projection and expand over the plain attribute:
-    // inlining the array_sort lambda tree at each of its three use sites
-    // multiplies the serialized task size (whole-plan interpreted HOF
-    // trees are large) and measurably slows task deserialization.
-    val ids = col("ids")
     val kept0 =
       (if (skewSafe) keepHotBucketsSkewSafe(withBucket, keyCols, maxBucket)
        else keepHotBuckets(withBucket, keyCols, maxBucket))
@@ -237,16 +255,8 @@ object Dedup {
           withBucket.sparkSession.sessionState.conf.numShufflePartitions)
         Scale.materialize(kept0.repartition(width, keyCols.map(col): _*))
       }
-    // Fused pair expansion (SortedIdPairs, r18): one codegen'd node per
-    // bucket instead of the interpreted
-    // flatten(transform(slice...struct)) lambda tree — same pairs, same
-    // order (pinned by an equivalence test against the SQL form), none
-    // of that form's per-element slice copies + flatten re-copy.
-    kept
-      .groupBy(keyCols.map(col): _*)
-      .agg(sort_array(collect_list(col(idCol))).as("ids"))
-      .select(explode(GraftFunctions.sortedIdPairs(ids)).as("p"))
-      .select(col("p.id_a"), col("p.id_b"))
+    inBucketPairs(kept, keyCols, Seq(idCol))
+      .select(col(s"${idCol}_a").as("id_a"), col(s"${idCol}_b").as("id_b"))
       .distinct()
   }
 
@@ -1053,20 +1063,11 @@ object Dedup {
         col("cm._1").as("chunk"), col("cm._2").as("mk"))
       .select(col("doc_id"), col("sig"), col("chunk"),
         cvExpr.bitwiseXOR(col("mk")).as("chunk_val"))
-    val es = col("es")
-    keepHotBuckets(rows, Seq("chunk", "chunk_val"), maxBucketSize)
-      .groupBy(col("chunk"), col("chunk_val"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("sig"))))
-        .as("es"))
-      .select(explode(flatten(transform(es, (x, i) =>
-        transform(slice(es, i + lit(2), size(es)), y => struct(
-          x.getField("doc_id").as("id_a"),
-          y.getField("doc_id").as("id_b"),
-          bit_count(x.getField("sig").bitwiseXOR(y.getField("sig")))
-            .as("hamming")))))).as("p"))
-      .select(col("p.id_a"), col("p.id_b"), col("p.hamming"))
-      .where(col("hamming") <= maxDist && col("id_a") =!= col("id_b"))
-      .distinct()
+    // two arms of one doc can share a midpoint bucket: drop self-pairs
+    hammingVerify(inBucketPairs(
+        keepHotBuckets(rows, Seq("chunk", "chunk_val"), maxBucketSize),
+        Seq("chunk", "chunk_val"), Seq("doc_id", "sig")), maxDist)
+      .where(col("id_a") =!= col("id_b"))
   }
 
   /** Simple-pigeonhole plan (see [[hammingPairs64]] doc). */
@@ -1082,23 +1083,21 @@ object Dedup {
         shiftrightunsigned(col("sig"), lo).bitwiseAND(lit(mask)).as("chunk_val"))
     }
     val chunks = sigs.select(col("doc_id"), col("sig"), inline(array(chunkExprs: _*)))
-    // In-bucket expansion (one scan + one shuffle, cf. bucketPairs): the
-    // signature rides in the bucket struct, so the Hamming verify needs no
-    // join back. array_sort orders by doc_id (first struct field).
-    val es = col("es")
-    keepHotBuckets(chunks, Seq("chunk", "chunk_val"), maxBucketSize)
-      .groupBy(col("chunk"), col("chunk_val"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("sig")))).as("es"))
-      .select(explode(flatten(transform(es, (x, i) =>
-        transform(slice(es, i + lit(2), size(es)), y => struct(
-          x.getField("doc_id").as("id_a"),
-          y.getField("doc_id").as("id_b"),
-          bit_count(x.getField("sig").bitwiseXOR(y.getField("sig")))
-            .as("hamming")))))).as("p"))
-      .select(col("p.id_a"), col("p.id_b"), col("p.hamming"))
+    // The signature rides in the bucket element, so the Hamming verify
+    // needs no join back.
+    hammingVerify(inBucketPairs(
+        keepHotBuckets(chunks, Seq("chunk", "chunk_val"), maxBucketSize),
+        Seq("chunk", "chunk_val"), Seq("doc_id", "sig")), maxDist)
+  }
+
+  /** Both Hamming plans' verify over [[inBucketPairs]] output: distance
+    * of the two signatures, a pair once however many buckets it met in. */
+  private def hammingVerify(pairs: DataFrame, maxDist: Int): DataFrame =
+    pairs
+      .select(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b"),
+        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).as("hamming"))
       .where(col("hamming") <= maxDist)
       .distinct()
-  }
 
   // ----------------------------------------- content-defined chunking
 
@@ -1126,18 +1125,11 @@ object Dedup {
       .select(col("doc_id"), col("c.fp").as("fp"), col("c.len").as("len"))
       .groupBy(col("doc_id"), col("fp"))
       .agg(max(col("len")).as("len")) // set semantics per (doc, chunk)
-    val es = col("es")
-    keepHotBuckets(chunks, Seq("fp"), maxDocsPerChunk)
-      .groupBy(col("fp"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("len")))).as("es"))
-      .select(explode(flatten(transform(es, (x, i) =>
-        transform(slice(es, i + lit(2), size(es)), y => struct(
-          x.getField("doc_id").as("id_a"),
-          y.getField("doc_id").as("id_b"),
-          x.getField("len").as("len")))))).as("p"))
-      .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
+    inBucketPairs(keepHotBuckets(chunks, Seq("fp"), maxDocsPerChunk),
+        Seq("fp"), Seq("doc_id", "len"))
+      .groupBy(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b"))
       .agg(count(lit(1)).as("shared_chunks"),
-        sum(col("p.len")).as("shared_bytes"))
+        sum(col("len_a")).as("shared_bytes"))
       .where(col("shared_chunks") >= minShared)
   }
 
@@ -1236,9 +1228,6 @@ object Dedup {
       explode(col("ghashes")).as("gram"))
     val hot = boundedHashDf(grams, hotCap)
     val complete = hot.length < hotCap || hot.last._2 <= maxDocsPerGram
-    val es = col("es")
-    // Struct sort orders by doc_id (first field), so pairs come out
-    // id_a < id_b.
     val pruned =
       if (!complete) keepHotBucketsSkewSafe(inv, Seq("gram"), maxDocsPerGram)
       else {
@@ -1246,18 +1235,11 @@ object Dedup {
         if (overCap.isEmpty) inv
         else inv.where(!col("gram").isInCollection(overCap))
       }
-    val buckets = pruned
-      .groupBy(col("gram"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("n_grams")))).as("es"))
-    (if (complete) buckets.where(size(es) >= 2) else buckets)
-      .select(explode(flatten(transform(es, (x, i) =>
-        transform(slice(es, i + lit(2), size(es)), y => struct(
-          x.getField("doc_id").as("id_a"),
-          y.getField("doc_id").as("id_b"),
-          x.getField("n_grams").as("na"),
-          y.getField("n_grams").as("nb")))))).as("p"))
-      .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
-        col("p.na").as("na"), col("p.nb").as("nb"))
+    // Singleton buckets (kept when the cap decision needed no count)
+    // expand to zero pairs.
+    inBucketPairs(pruned, Seq("gram"), Seq("doc_id", "n_grams"))
+      .groupBy(col("doc_id_a").as("id_a"), col("doc_id_b").as("id_b"),
+        col("n_grams_a").as("na"), col("n_grams_b").as("nb"))
       .agg(count(lit(1)).as("shared"))
   }
 
@@ -1506,18 +1488,11 @@ object Dedup {
       threshold: Double = 0.95, maxClusterSize: Int = 4096,
       refineIters: Int = 0): DataFrame = {
     val assigned = clusterAssign(df, vec, id, nlist, refineIters)
-    val es = col("es") // sorted by cid (first struct field)
-    val pairs = keepHotBuckets(assigned, Seq("cluster_id"), maxClusterSize)
-      .groupBy(col("cluster_id"))
-      .agg(sort_array(collect_list(struct(col("cid"), col("cvec")))).as("es"))
-      .select(explode(flatten(transform(es, (x, i) =>
-        transform(slice(es, i + lit(2), size(es)), y => struct(
-          x.getField("cid").as("id_a"),
-          y.getField("cid").as("id_b"),
-          x.getField("cvec").as("va"),
-          y.getField("cvec").as("vb")))))).as("p"))
-      .select(col("p.id_b").as("id_b"),
-        GraftFunctions.cosine(col("p.va"), col("p.vb")).as("cosine"))
+    val pairs = inBucketPairs(
+        keepHotBuckets(assigned, Seq("cluster_id"), maxClusterSize),
+        Seq("cluster_id"), Seq("cid", "cvec"))
+      .select(col("cid_b").as("id_b"),
+        GraftFunctions.cosine(col("cvec_a"), col("cvec_b")).as("cosine"))
       .where(col("cosine") >= threshold)
     assigned
       .join(pairs.select(col("id_b").as("cid")).distinct(), Seq("cid"), "left_anti")
@@ -1551,19 +1526,12 @@ object Dedup {
       .withColumn("bands", bandSigCol(col("v"), dim, bands, seed))
     val buckets = sigs.select(col("vid"), col("v"), posexplode(col("bands")))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "sig")
-    // In-bucket expansion (one scan + one shuffle, cf. bucketPairs); the
-    // vectors ride in the bucket struct so the cosine verify needs no join.
-    val es = col("es") // sorted by vid (first struct field)
-    keepHotBuckets(buckets, Seq("band", "sig"), maxBucketSize)
-      .groupBy(col("band"), col("sig"))
-      .agg(sort_array(collect_list(struct(col("vid"), col("v")))).as("es"))
-      .select(explode(flatten(transform(es, (x, i) =>
-        transform(slice(es, i + lit(2), size(es)), y => struct(
-          x.getField("vid").as("id_a"),
-          y.getField("vid").as("id_b"),
-          x.getField("v").as("va"),
-          y.getField("v").as("vb")))))).as("p"))
-      .select(col("p.id_a"), col("p.id_b"), col("p.va"), col("p.vb"))
+    // The vectors ride in the bucket element, so the cosine verify needs
+    // no join.
+    inBucketPairs(keepHotBuckets(buckets, Seq("band", "sig"), maxBucketSize),
+        Seq("band", "sig"), Seq("vid", "v"))
+      .select(col("vid_a").as("id_a"), col("vid_b").as("id_b"),
+        col("v_a").as("va"), col("v_b").as("vb"))
       .distinct()
       .withColumn("cosine", GraftFunctions.cosine(col("va"), col("vb")))
       .where(col("cosine") >= threshold)

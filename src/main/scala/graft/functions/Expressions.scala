@@ -1259,43 +1259,48 @@ object BandHashes {
   }
 }
 
-/** All ordered pairs (ids[i], ids[j]), i < j, of one bucket's id list
-  * in ONE fused pass: element-for-element identical (values AND order)
-  * to the SQL form the bucket expansion used —
-  * `flatten(transform(ids, (x, i) => transform(slice(ids, i+2, size(ids)),
-  * y => struct(x as id_a, y as id_b))))` — but with none of that form's
-  * costs: the interpreted higher-order lambdas allocated a `slice` copy
-  * of the tail per OUTER element plus a nested struct array per band,
-  * then `flatten` copied the lot again (the r18 d16 profile read the
-  * pair-explosion stage as pure CPU on kilobytes of data). One node,
-  * one output allocation. Upstream is always `sort_array(collect_list(id))`,
-  * which cannot emit null elements; an actual null THROWS (the
-  * [[SortedLongIntersectCount]] loudly-wrong convention) rather than
-  * silently pairing a fabricated id. */
+/** All ordered pairs (es[i], es[j]), i < j, of one sorted bucket's
+  * element list (bare ids or structs carrying a payload) in ONE fused
+  * pass, identical in values AND order to the SQL form the in-bucket
+  * expansions used (nested `transform` lambdas pairing each element with
+  * a `slice` of its tail, then `flatten`), without that form's per-element
+  * tail copies and flatten re-copy, and without its `CodegenFallback`
+  * lambdas, which kept the expanding `Generate` out of whole-stage
+  * codegen. Each element is read once and shared by its n-1 pairs.
+  * Upstream is always `sort_array(collect_list(...))`, which cannot emit
+  * null elements; an actual null THROWS (the [[SortedLongIntersectCount]]
+  * loudly-wrong convention) rather than silently pairing a fabricated
+  * element. */
 case class SortedIdPairs(child: Expression) extends UnaryExpression {
+
+  private def elementType: DataType =
+    child.dataType.asInstanceOf[ArrayType].elementType
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(
-      StructField("id_a", LongType, nullable = false),
-      StructField("id_b", LongType, nullable = false))),
+      StructField("a", elementType, nullable = false),
+      StructField("b", elementType, nullable = false))),
     containsNull = false)
 
   override def checkInputDataTypes() = {
     child.dataType match {
-      case ArrayType(LongType, _) =>
+      case _: ArrayType =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
       case other =>
         org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"sorted_id_pairs expects ARRAY<BIGINT>, got ${other.sql}")
+          s"sorted_id_pairs expects an ARRAY, got ${other.sql}")
     }
   }
 
   override def nullSafeEval(input: Any): Any =
-    SortedIdPairs.pairs(input.asInstanceOf[ArrayData])
+    SortedIdPairs.pairs(input.asInstanceOf[ArrayData], elementType)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val et = ctx.addReferenceObj("elementType", elementType,
+      classOf[DataType].getName)
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SortedIdPairs.pairs($c);")
+      s"${ev.value} = graft.functions.SortedIdPairs.pairs($c, $et);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -1304,25 +1309,28 @@ case class SortedIdPairs(child: Expression) extends UnaryExpression {
 object SortedIdPairs {
   /** Shared by eval and generated code. Pair order is the SQL form's:
     * outer index ascending, inner index ascending. */
-  def pairs(ids: ArrayData): ArrayData = {
-    val n = ids.numElements()
+  def pairs(es: ArrayData, elementType: DataType): ArrayData = {
+    val n = es.numElements()
     val total = n.toLong * (n - 1L) / 2L
     require(total <= Int.MaxValue,
-      s"sorted_id_pairs: $n ids expand to $total pairs (> 2^31-1); " +
+      s"sorted_id_pairs: $n elements expand to $total pairs (> 2^31-1); " +
         "cap the bucket (maxDocsPerGram) before expanding")
+    val elems = new Array[Any](n)
+    var i = 0
+    while (i < n) {
+      if (es.isNullAt(i)) throw new IllegalArgumentException(
+        s"sorted_id_pairs: null element at index $i")
+      elems(i) = es.get(i, elementType)
+      i += 1
+    }
     val out = new Array[Any](total.toInt)
     var k = 0
-    var i = 0
+    i = 0
     while (i < n - 1) {
-      if (ids.isNullAt(i)) throw new IllegalArgumentException(
-        s"sorted_id_pairs: null id at index $i")
-      val a = ids.getLong(i)
       var j = i + 1
       while (j < n) {
-        if (ids.isNullAt(j)) throw new IllegalArgumentException(
-          s"sorted_id_pairs: null id at index $j")
         out(k) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](a, ids.getLong(j)))
+          Array[Any](elems(i), elems(j)))
         k += 1
         j += 1
       }

@@ -168,7 +168,7 @@ object ExtensionQueries {
     docs.union(dups)
   }
 
-  private def plantedEmbeddings(s: SparkSession, d: String): DataFrame = {
+  private[queries] def plantedEmbeddings(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val dups = e.where(col("vec_id") < 25).select(
       (col("vec_id") + 100000).as("vec_id"),

@@ -13,7 +13,9 @@ import org.apache.spark.sql.types._
   * narrow, shuffle-free projection: per declared column we compute a typed
   * cast plus an error expression, collect errors into an array, and derive
   * both output sides from the single error column. No data ever touches
-  * the driver; the whole operator stays inside whole-stage codegen.
+  * the driver. The error list is `filter(array(errs…), e => e.isNotNull)`,
+  * an interpreted higher-order function (`CodegenFallback`), so the
+  * operators that evaluate it run outside whole-stage codegen.
   *
   * Error classes (messages per box_ingest.py:96-119):
   *   - "Missing column: X"                    (box_ingest.py:96-97)

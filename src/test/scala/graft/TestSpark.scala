@@ -11,6 +11,9 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // plan strings carry whole scan locations: plan tests find scans
+      // by path, and the temp directory's depth is not fixed
+      .config("spark.sql.maxMetadataStringLength", "1000")
       .config("spark.sql.warehouse.dir",
         s"${sys.props("java.io.tmpdir")}/graft-test-warehouse-${System.nanoTime()}")
       .getOrCreate()

@@ -105,13 +105,37 @@ class OptimizedInternalsSpec extends AnyFunSuite {
     }
   }
 
+  /** The interpreted SQL form the pair kernel replaced, kept as its
+    * differential oracle. */
+  private def sqlPairs(es: org.apache.spark.sql.Column) =
+    flatten(transform(es, (x, i) =>
+      transform(slice(es, i + lit(2), size(es)),
+        y => struct(x.as("a"), y.as("b")))))
+
+  /** (bucket -> pairs) of the kernel and of the SQL form over the `es`
+    * column of `buckets`, both as arrays and exploded through a
+    * `Generate` (bucket -> pairs in position order). */
+  private def pairForms(buckets: DataFrame) = {
+    val es = col("es")
+    def arrays(f: org.apache.spark.sql.Column) =
+      buckets.select(col("b"), f.as("p")).collect()
+        .map(r => r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1)).toMap
+    def exploded(f: org.apache.spark.sql.Column) =
+      buckets.select(col("b"), posexplode(f)).collect()
+        .groupBy(_.getLong(0)).map { case (b, rs) =>
+          b -> rs.sortBy(_.getInt(1)).map(_.getStruct(2)).toSeq }
+    ((arrays(GraftFunctions.sortedIdPairs(es)), arrays(sqlPairs(es))),
+      (exploded(GraftFunctions.sortedIdPairs(es)), exploded(sqlPairs(es))))
+  }
+
   test("sortedIdPairs: identical pairs AND order vs the " +
       "flatten(transform(slice...struct)) form") {
-    // The fused expression replaces the SQL lambda tree in the bucket
-    // pair expansion; the pair SET drives every bucketPairs consumer
-    // (prefix/ngram jaccard, minhash candidates), so pin values and
-    // order against the original expression, including the empty and
-    // single-id buckets (both must expand to zero rows).
+    // The fused expression replaces the SQL lambda tree in every
+    // in-bucket pair expansion; the pair SET drives every pair operator
+    // (minhash candidates, prefix/ngram jaccard, Hamming, chunk,
+    // semantic and embedding pairs), so pin values and order against
+    // the original expression, including the empty and single-element
+    // buckets (both must expand to zero rows).
     val rnd = new scala.util.Random(11)
     val buckets = Seq(
       Seq.empty[Long],
@@ -120,23 +144,55 @@ class OptimizedInternalsSpec extends AnyFunSuite {
       (0 until 37).map(_ => rnd.nextLong()).sorted,
       (0 until 5).map(_ => 42L).toSeq // duplicate ids still pair
     ).zipWithIndex.map { case (ids, i) => (i.toLong, ids) }
-      .toDF("b", "ids")
-    val ids = col("ids")
-    val fused = buckets.select(col("b"),
-        GraftFunctions.sortedIdPairs(ids).as("p")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1)).toMap
-    val sql = buckets.select(col("b"),
-        flatten(transform(ids, (x, i) =>
-          transform(slice(ids, i + lit(2), size(ids)),
-            y => struct(x.as("id_a"), y.as("id_b"))))).as("p")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1)).toMap
+      .toDF("b", "es")
+    val ((fused, sql), (fusedX, sqlX)) = pairForms(buckets)
     assert(fused === sql)
-    // schema parity: field names the downstream select addresses
-    val fields = buckets.select(GraftFunctions.sortedIdPairs(ids).as("p"))
+    assert(fusedX === sqlX)
+    // schema parity: the element type passes through unchanged
+    val elem = buckets.select(GraftFunctions.sortedIdPairs(col("es")).as("p"))
       .schema.head.dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
       .elementType.asInstanceOf[org.apache.spark.sql.types.StructType]
-      .fieldNames.toSeq
-    assert(fields === Seq("id_a", "id_b"))
+    assert(elem.fieldNames.toSeq === Seq("a", "b"))
+    assert(elem.fields.forall(_.dataType ==
+      org.apache.spark.sql.types.LongType))
+    // a null element is loudly wrong, never paired
+    val nulls = Seq((0L, Seq[java.lang.Long](1L, null, 3L))).toDF("b", "es")
+    intercept[Exception](
+      nulls.select(GraftFunctions.sortedIdPairs(col("es"))).collect())
+  }
+
+  test("sortedIdPairs over struct elements: identical pairs AND order vs " +
+      "the SQL form, for every payload the pair operators carry") {
+    // Buckets built the way the pair operators build them: many buckets
+    // in one frame through sort_array(collect_list(struct(...))), so a
+    // kernel that reused an input row across buckets would show as a
+    // wrong payload. Sizes 0..12 cover the empty and single-element
+    // buckets; ids repeat within a bucket.
+    val rnd = new scala.util.Random(29)
+    val sizes = Seq.fill(120)(rnd.nextInt(13))
+    val total = sizes.map(n => n * (n - 1) / 2).sum
+    // (bucket, id, payload) rows; an empty bucket is one all-null row,
+    // which the `when` below keeps out of its (then empty) list
+    def rows[T](payload: => T) = sizes.zipWithIndex.flatMap { case (n, b) =>
+      if (n == 0) Seq((b.toLong, Option.empty[Long], Option.empty[T]))
+      else Seq.fill(n)((b.toLong, Some(rnd.nextInt(8).toLong), Option(payload)))
+    }
+    for ((name, df) <- Seq(
+        "bigint" -> rows(rnd.nextLong()).toDF("b", "id", "payload"),
+        "array<float>" -> rows(Seq.fill(rnd.nextInt(4))(rnd.nextFloat()))
+          .toDF("b", "id", "payload"),
+        "string with null fields" -> rows(
+          if (rnd.nextInt(3) == 0) null else s"s${rnd.nextInt(5)}")
+          .toDF("b", "id", "payload"))) {
+      val buckets = df.groupBy(col("b"))
+        .agg(sort_array(collect_list(when(col("id").isNotNull,
+          struct(col("id"), col("payload"))))).as("es"))
+      val ((fused, sql), (fusedX, sqlX)) = pairForms(buckets)
+      assert(fused.size === sizes.size, name)
+      assert(fused === sql, name)
+      assert(fusedX === sqlX, name)
+      assert(fused.values.map(_.size).sum === total, name)
+    }
   }
 
   test("gopherQuality kernel: all eight metrics and the verdict match " +

@@ -1,11 +1,11 @@
 package graft.queries
 
 import graft.TestSpark
-import graft.functions.GopherQuality
+import graft.functions.{GopherQuality, SortedIdPairs}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{FilterExec, InputAdapter, RDDScanExec, SortExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{FilterExec, GenerateExec, InputAdapter, RDDScanExec, SortExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
 import org.apache.spark.sql.execution.joins.{HashJoin, SortMergeJoinExec}
@@ -518,18 +518,50 @@ class PlanSpec extends AnyFunSuite {
     assert(!s.contains("BroadcastNestedLoopJoin"), s)
   }
 
+  /** Every node of `p` with whether it runs inside a whole-stage codegen
+    * stage, descending through adaptive wrappers, query stages and
+    * reused exchanges. */
+  private def stagedNodes(p: SparkPlan, inStage: Boolean = false)
+      : Seq[(SparkPlan, Boolean)] = p match {
+    case a: AdaptiveSparkPlanExec => stagedNodes(a.executedPlan)
+    case q: QueryStageExec => stagedNodes(q.plan)
+    case r: ReusedExchangeExec => stagedNodes(r.child)
+    case w: WholeStageCodegenExec => stagedNodes(w.child, inStage = true)
+    case i: InputAdapter => stagedNodes(i.child)
+    case _ => (p, inStage) +: p.children.flatMap(stagedNodes(_, inStage))
+  }
+
   /** Every filter in `p` whose condition calls the Gopher kernel, with
     * whether it runs inside a whole-stage codegen stage. */
-  private def gopherFilters(p: SparkPlan, inStage: Boolean = false)
-      : Seq[(FilterExec, Boolean)] = p match {
-    case a: AdaptiveSparkPlanExec => gopherFilters(a.executedPlan)
-    case q: QueryStageExec => gopherFilters(q.plan)
-    case r: ReusedExchangeExec => gopherFilters(r.child)
-    case w: WholeStageCodegenExec => gopherFilters(w.child, inStage = true)
-    case i: InputAdapter => gopherFilters(i.child)
-    case f: FilterExec if f.condition.exists(_.isInstanceOf[GopherQuality]) =>
-      (f, inStage) +: gopherFilters(f.child, inStage)
-    case _ => p.children.flatMap(gopherFilters(_, inStage))
+  private def gopherFilters(p: SparkPlan): Seq[(FilterExec, Boolean)] =
+    stagedNodes(p).collect {
+      case (f: FilterExec, inStage)
+          if f.condition.exists(_.isInstanceOf[GopherQuality]) => (f, inStage)
+    }
+
+  /** Final physical plans of every execution a run of `body`'s frame goes
+    * through: the eager jobs the operator cuts, then the frame itself,
+    * run through the noop sink so adaptive stages are final (AQE applies
+    * codegen per query stage, so the plan before execution cannot be
+    * read for it). */
+  private def plansOf(body: => DataFrame): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(name: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        seen.add(qe.executedPlan)
+      def onFailure(name: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body.write.format("noop").mode("overwrite").save()
+      org.apache.spark.sql.graftbridge.SessionBridge
+        .waitUntilEmpty(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
   }
 
   test("curation quality filters: one Gopher kernel call per row inside " +
@@ -540,28 +572,6 @@ class PlanSpec extends AnyFunSuite {
     val docs = graft.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text"))
     val bench = docs.where(col("doc_id") % 20 === 0).select(col("text"))
-    // Plans of every execution a run of `body`'s frame goes through: the
-    // eager materializations the operators cut, then the rest of the
-    // frame, run through the noop sink so adaptive stages are final.
-    def plansOf(body: => DataFrame): Seq[SparkPlan] = {
-      val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
-      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-        def onSuccess(name: String,
-            qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-          seen.add(qe.executedPlan)
-        def onFailure(name: String,
-            qe: org.apache.spark.sql.execution.QueryExecution,
-            e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(listener)
-      try {
-        body.write.format("noop").mode("overwrite").save()
-        org.apache.spark.sql.graftbridge.SessionBridge
-          .waitUntilEmpty(spark.sparkContext)
-      } finally spark.listenerManager.unregister(listener)
-      import scala.jdk.CollectionConverters._
-      seen.asScala.toSeq
-    }
     val recs = (1L to 40L).map(i =>
       (i, s"https://site${i % 3}.example.com/p/$i",
         ("word " * 30) + "the end.")).toDF("doc_id", "url", "body")
@@ -590,6 +600,41 @@ class PlanSpec extends AnyFunSuite {
     val calls = report.collect { case n => n.expressions }.flatten
       .flatMap(_.collect { case g: GopherQuality => g })
     assert(calls.size === 1, s"gopherQuality report\n$report")
+  }
+
+  test("pair operators: the in-bucket pair expansion runs inside " +
+      "whole-stage codegen (minhash, simhash narrow and expanded, chunk, " +
+      "ngram jaccard, semantic and embedding pairs)") {
+    import org.apache.spark.sql.functions._
+    import graft.ext.Dedup
+    // planted copies, so every operator has hot buckets and no stage is
+    // replaced by an empty relation before its plan is final
+    val docs = ExtensionQueries.plantedDocs(spark, sf)
+    val vecs = ExtensionQueries.plantedEmbeddings(spark, sf)
+    val ops = Seq(
+      "minHashPairs" -> Dedup.minHashPairs(docs, "text", "doc_id"),
+      "simHashPairs maxDist 3" ->
+        Dedup.simHashPairs(docs, "text", "doc_id", maxDist = 3),
+      "simHashPairs maxDist 8" ->
+        Dedup.simHashPairs(docs, "text", "doc_id", maxDist = 8),
+      "chunkPairs" -> Dedup.chunkPairs(
+        docs.select(col("doc_id"), col("text").cast("binary").as("bytes")),
+        "bytes", "doc_id"),
+      "ngramJaccardPairs" -> Dedup.ngramJaccardPairs(docs, "text", "doc_id"),
+      "semDedup" -> Dedup.semDedup(vecs, "embedding", "vec_id", nlist = 4),
+      "embeddingPairs" ->
+        Dedup.embeddingPairs(vecs, "embedding", "vec_id", dim = 64))
+    for ((op, frame) <- ops) {
+      val plans = plansOf(frame)
+      val expansions = plans.flatMap(stagedNodes(_)).collect {
+        case (g: GenerateExec, inStage)
+            if g.generator.exists(_.isInstanceOf[SortedIdPairs]) => inStage
+      }
+      assert(expansions.nonEmpty,
+        s"$op: no pair-kernel Generate\n${plans.mkString("\n")}")
+      assert(expansions.forall(identity),
+        s"$op: the pair expansion runs outside codegen\n${plans.mkString("\n")}")
+    }
   }
 
   test("whole-stage codegen covers the custom expressions (no CodegenFallback gap)") {
